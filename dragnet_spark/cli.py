@@ -602,6 +602,7 @@ def cmd_index_read(argv, cat: Catalog, out):
     """Reduce phase of a distributed build: read tagged points from
     stdin and materialize the index views."""
     from dragnet_spark.index.build import BUCKET_COL, INDEX_META_FILE, INDEX_VERSION
+    from dragnet_spark.index.store import write_meta
     import os
 
     opts = _parse_args(argv, ["index-config", "interval"])
@@ -644,9 +645,7 @@ def cmd_index_read(argv, cat: Catalog, out):
         "datasource_filter": ds.filter,
         "metrics": [m.to_json() for m in metrics],
     }
-    os.makedirs(root, exist_ok=True)
-    with open(os.path.join(root, INDEX_META_FILE), "w") as f:
-        json.dump(meta, f, indent=2)
+    write_meta(root, INDEX_META_FILE, meta)
 
 
 def cmd_compact(argv, cat: Catalog, out):

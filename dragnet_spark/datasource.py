@@ -22,8 +22,8 @@ from pyspark.sql import functions as F
 
 from dragnet_spark.config import DatasourceConfig
 from dragnet_spark.query import QueryConfig
-from dragnet_spark.scan import SchemaResolver, VariantResolver, VARIANT_COL
-from dragnet_spark.sources.ndjson import read_skinner
+from dragnet_spark.scan import SchemaResolver, VariantResolver
+from dragnet_spark.sources.ndjson import read_skinner, variant_lines
 from dragnet_spark.sources.pathenum import prune_paths
 
 
@@ -136,12 +136,7 @@ def load_datasource(
         obs = Observation("json parser")
         observations["json parser"] = obs
         txt = txt.observe(obs, F.count(F.lit(1)).alias("ninputs"))
-    nonblank = txt.filter(F.trim(F.col("value")) != "")
-    df = (
-        nonblank
-        .select(F.try_parse_json(F.col("value")).alias(VARIANT_COL))
-        .filter(F.col(VARIANT_COL).isNotNull())
-    )
+    df = variant_lines(txt)
     if observations is not None:
         from pyspark.sql import Observation
 

@@ -37,12 +37,12 @@ from __future__ import annotations
 
 from dragnet_spark.errors import ContractError
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dragnet_spark.index.store import read_meta, write_meta
 from dragnet_spark.ops.decontam import (
     DEFAULT_K,
     DEFAULT_M_BITS,
@@ -108,16 +108,12 @@ def build_bloom_store(
         "n_grams": stored.select("gh").distinct().count(),
         "src_attribution": src_col is not None,
     }
-    mtmp = os.path.join(path, BLOOM_MARKER + ".tmp")
-    with open(mtmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(mtmp, os.path.join(path, BLOOM_MARKER))
+    write_meta(path, BLOOM_MARKER, meta)
     return meta
 
 
 def load_bloom_meta(path: str) -> dict:
-    with open(os.path.join(path, BLOOM_MARKER)) as f:
-        return json.load(f)
+    return read_meta(path, BLOOM_MARKER)
 
 
 def score_against_bloom_store(

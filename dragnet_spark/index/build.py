@@ -23,7 +23,6 @@ shuffle carries unique tuples, not raw rows.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass, field as dc_field
 from typing import Any
@@ -33,6 +32,7 @@ from pyspark.sql import functions as F
 
 from dragnet_spark.fieldspec import Breakdown, parse_breakdowns
 from dragnet_spark.index.lease import hold_lease
+from dragnet_spark.index.store import STAGE_SUFFIX, write_meta
 from dragnet_spark.krill import validate_predicate
 from dragnet_spark.query import QueryConfig
 from dragnet_spark.scan import VALUE_COL, scan, synthetic_date_column
@@ -304,9 +304,7 @@ def build_index(
         "datasource_filter": datasource_filter,
         "metrics": [m.to_json() for m in metrics],
     }
-    os.makedirs(index_path, exist_ok=True)
-    with open(os.path.join(index_path, INDEX_META_FILE), "w") as f:
-        json.dump(meta, f, indent=2)
+    write_meta(index_path, INDEX_META_FILE, meta)
 
 
 def compact_index(
@@ -361,7 +359,7 @@ def _compact_index_locked(spark, index_path, meta, interval):
         )
         # stage first: Spark cannot overwrite the parquet tree it is
         # currently reading
-        stage = path + ".compact_tmp"
+        stage = path + STAGE_SUFFIX
         try:
             if interval != "all" and BUCKET_COL in df.columns:
                 # keep the build path's row clustering (row-group

@@ -25,9 +25,8 @@ decomposition:
 Reads resolve ``labels`` through the flattened redirect forest (the
 redirect table pointer-jumps to its roots in O(log chain) self-joins
 of a SMALL table, then one join against labels). ``compact`` folds
-the redirects into the base table (one full pass, stage-then-swap,
-lease-serialized) — the same amortization contract as every other
-store's compaction.
+the redirects into the base table (one full pass) — the same
+amortization contract as every other store's compaction.
 
 EXACTNESS (the stream==batch discipline all dragnet stores hold):
 because every label is the minimum id of the node set it stands for,
@@ -44,9 +43,9 @@ Layout (marker-file convention of index/maintain.py):
     <path>/labels/                  (id, component) parquet
     <path>/redirects/               (old_label, new_label) parquet
 
-Folds are lease-serialized (index/lease.py); compaction stages then
-swaps, so a reader mid-compact sees the old state or the new, never a
-partial directory.
+Folds and compaction are lease-serialized; compaction rewrites
+``labels/`` through the shared stage-and-swap. The marker, swap and
+reader contract are index/store.py's.
 
 Reference parity: the reference engine has no graph or store of this
 kind; this is a beyond-reference continuous-curation addition (the
@@ -55,14 +54,19 @@ brief's dedup family under streaming ingest).
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dragnet_spark.index.lease import ensure_lease, hold_lease
+from dragnet_spark.index.store import (
+    _read_store_parquet,
+    _recover_staged,
+    _stage_and_swap,
+    read_meta,
+    write_meta,
+)
 from dragnet_spark.ops.graph import connected_components
 
 COMP_META = "_components_store.json"
@@ -70,13 +74,8 @@ LABELS_DIR = "labels"
 REDIRECTS_DIR = "redirects"
 
 
-def _meta_path(path: str) -> str:
-    return os.path.join(path, COMP_META)
-
-
 def load_components_meta(path: str) -> dict:
-    with open(_meta_path(path)) as f:
-        return json.load(f)
+    return read_meta(path, COMP_META)
 
 
 def build_components_store(
@@ -87,12 +86,10 @@ def build_components_store(
     id_col: str = "id",
 ) -> None:
     """Full closure over (ids, pairs) materialized at ``path``."""
-    os.makedirs(path, exist_ok=True)
     labels = connected_components(ids, pairs, id_col=id_col)
     labels.write.mode("overwrite").parquet(os.path.join(path, LABELS_DIR))
     _write_empty_redirects(spark, path)
-    with open(_meta_path(path), "w") as f:
-        json.dump({"version": "1.0", "id_col": id_col}, f)
+    write_meta(path, COMP_META, {"version": "1.0", "id_col": id_col})
 
 
 def _write_empty_redirects(spark: SparkSession, path: str) -> None:
@@ -155,6 +152,7 @@ def merge_components_batch(
     del meta  # id space is the caller's; nothing else to configure yet
     labels_path = os.path.join(path, LABELS_DIR)
     with hold_lease(path, "components-merge"):
+        _recover_staged(labels_path)
         labels = spark.read.parquet(labels_path)
         red = _flat_redirects(spark, path)
         ends = (
@@ -212,7 +210,7 @@ def components_store_read(spark: SparkSession, path: str) -> DataFrame:
     """(id, component) with redirects applied — the current
     assignment, identical to a from-scratch closure over every pair
     ever folded."""
-    labels = spark.read.parquet(os.path.join(path, LABELS_DIR))
+    labels = _read_store_parquet(spark, path, LABELS_DIR)
     red = _flat_redirects(spark, path)
     return (
         labels.join(red, labels.component == red.old_label, "left")
@@ -228,31 +226,11 @@ def compact_components_store(spark: SparkSession, path: str) -> None:
     redirect join entirely. The per-batch folds stay O(batch); this
     is the amortized cost, run on the maintenance cadence like every
     other store compaction."""
-    labels_path = os.path.join(path, LABELS_DIR)
     with hold_lease(path, "components-compact"):
-        stage = labels_path + ".compact_tmp"
-        old = labels_path + ".compact_old"
-        shutil.rmtree(stage, ignore_errors=True)
-        # a lone .compact_old from a crash between the two renames is
-        # the only copy of the labels — restore it before reading
-        if os.path.exists(old) and not os.path.exists(labels_path):
-            os.rename(old, labels_path)
-        shutil.rmtree(old, ignore_errors=True)
-        resolved = components_store_read(spark, path)
-        try:
-            resolved.write.mode("overwrite").parquet(stage)
-            ensure_lease(path)
-            os.rename(labels_path, old)
-            try:
-                os.rename(stage, labels_path)
-            except BaseException:
-                # roll back the first rename so the store never loses
-                # its labels/ directory (the finally below would
-                # otherwise delete the staged copy too, stranding the
-                # only data in .compact_old)
-                os.rename(old, labels_path)
-                raise
-            shutil.rmtree(old, ignore_errors=True)
-            _write_empty_redirects(spark, path)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+        _stage_and_swap(
+            os.path.join(path, LABELS_DIR),
+            lambda stage: components_store_read(spark, path)
+            .write.mode("overwrite")
+            .parquet(stage),
+        )
+        _write_empty_redirects(spark, path)

@@ -20,6 +20,9 @@ fingerprint's first hex byte (256 buckets), so:
 Reference parity: dragnet's index answers metric queries without
 rescanning raw NDJSON (lib/dn.js build → index-scan); this store
 answers "have we seen this document?" without rescanning corpus text.
+
+Every store here keeps index/store.py's contract: atomic meta marker,
+layout token, stage-and-swap compaction, swap-safe reads.
 """
 
 from __future__ import annotations
@@ -27,13 +30,22 @@ from __future__ import annotations
 from dragnet_spark.errors import ContractError
 
 import hashlib
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dragnet_spark.index.lease import ensure_lease, hold_lease
+from dragnet_spark.index.lease import hold_lease
+from dragnet_spark.index.store import (
+    _check_layout,
+    _layout_token,
+    _read_store_parquet,
+    _recover_staged,
+    _staged_rewrite,
+    _write_layout,
+    read_meta,
+    write_meta,
+)
 from dragnet_spark.ops import text as _text
 
 STORE_DIR = "fingerprints"
@@ -43,51 +55,6 @@ FP_META = "_fp_store.json"
 SRP_DIR = "srp_bands"
 SRP_PAIR_DIR = "srp_band_pairs"
 SRP_META = "_srp_store.json"
-#: same crash-detection discipline as index/vector.py: the token lives
-#: in BOTH the meta file and (underscore-prefixed, Spark-invisible)
-#: inside the data directory — any maintenance crash that leaves the
-#: two out of sync is detected loudly at probe/append time instead of
-#: silently answering against mismatched keys
-LAYOUT_FILE = "_dn_layout"
-
-
-def _layout_token(basis: dict) -> str:
-    import hashlib
-
-    return hashlib.sha256(
-        json.dumps(basis, sort_keys=True).encode()
-    ).hexdigest()[:16]
-
-
-def _write_layout(data_dir: str, token: str) -> None:
-    with open(os.path.join(data_dir, LAYOUT_FILE), "w") as f:
-        f.write(token)
-
-
-def _check_layout(path: str, meta_file: str, data_dir: str, what: str) -> None:
-    """Fail loudly when the data directory's layout token disagrees
-    with the meta file's — the signature of a maintenance job (compact,
-    rebuild-with-new-params) that crashed between its directory swap
-    and its meta replace. Back-compat: stores built before tokens
-    existed (either side missing) are accepted unchecked."""
-    meta_path = os.path.join(path, meta_file)
-    tok_path = os.path.join(path, data_dir, LAYOUT_FILE)
-    if not (os.path.exists(meta_path) and os.path.exists(tok_path)):
-        return
-    with open(meta_path) as f:
-        expect = json.load(f).get("layout_token")
-    if not expect:
-        return
-    with open(tok_path) as f:
-        disk = f.read().strip()
-    if disk != expect:
-        raise ContractError(
-            f"{what} layout/meta mismatch (a maintenance job crashed "
-            f"mid-swap?): data dir carries layout {disk!r} but metadata "
-            f"expects {expect!r} — rebuild or re-run the maintenance job"
-        )
-
-
 #: identifies the fingerprint function; bump when ops/text.fingerprint
 #: changes so a probe against a stale store fails loudly instead of
 #: missing every duplicate
@@ -106,11 +73,9 @@ def _check_fp_algo(path: str) -> None:
     :func:`_check_layout` only compares the two PERSISTED tokens
     (crash detection); this compares persisted vs code (algo drift).
     Back-compat: pre-token stores (no meta token) pass unchecked."""
-    meta_path = os.path.join(path, FP_META)
-    if not os.path.exists(meta_path):
+    if not os.path.exists(os.path.join(path, FP_META)):
         return
-    with open(meta_path) as f:
-        expect = json.load(f).get("layout_token")
+    expect = read_meta(path, FP_META).get("layout_token")
     if expect and expect != _fp_token():
         raise ContractError(
             "fingerprint store was built with a different fingerprint "
@@ -140,10 +105,9 @@ def build_fingerprint_store(
     )
     tok = _fp_token()
     _write_layout(os.path.join(path, STORE_DIR), tok)
-    with open(os.path.join(path, FP_META), "w") as f:
-        json.dump(
-            {"version": "1.0", "algo": _FP_ALGO, "layout_token": tok}, f
-        )
+    write_meta(
+        path, FP_META, {"version": "1.0", "algo": _FP_ALGO, "layout_token": tok}
+    )
 
 
 def append_fingerprints(
@@ -211,7 +175,6 @@ def probe_new_documents(
     the join re-evaluate the source independently, so a source that
     changes between jobs could be gated small but join huge.
     """
-    _recover_staged(os.path.join(path, STORE_DIR))
     _check_layout(path, FP_META, STORE_DIR, "fingerprint store")
     _check_fp_algo(path)
     store = _read_store_parquet(spark, path, STORE_DIR).select(
@@ -336,14 +299,12 @@ def build_band_store(
         {k: meta[k] for k in ("version", "num_hashes", "bands", "ngram")}
     )
     _write_layout(os.path.join(path, BAND_DIR), meta["layout_token"])
-    with open(os.path.join(path, BAND_META), "w") as f:
-        json.dump(meta, f)
+    write_meta(path, BAND_META, meta)
     return meta
 
 
 def load_band_store_meta(path: str) -> dict:
-    with open(os.path.join(path, BAND_META)) as f:
-        meta = json.load(f)
+    meta = read_meta(path, BAND_META)
     if meta.get("version") != _BAND_STORE_VERSION:
         raise ContractError(
             f"minhash band store at {path!r} was built under key "
@@ -399,7 +360,6 @@ def probe_near_duplicates(
     document or a pre- vs post-compaction store cannot change any
     probe output. That makes every field of this result invariant
     under ``append`` replays and ``compact_band_store``."""
-    _recover_staged(os.path.join(path, BAND_DIR))
     _check_layout(path, BAND_META, BAND_DIR, "minhash band store")
     meta = load_band_store_meta(path)
     banded = _banded_rows(
@@ -466,7 +426,6 @@ def band_store_pairs(
         token_sets,
     )
 
-    _recover_staged(os.path.join(path, BAND_DIR))
     _check_layout(path, BAND_META, BAND_DIR, "minhash band store")
     meta = load_band_store_meta(path)
     banded = _read_store_parquet(spark, path, BAND_DIR).select(
@@ -523,10 +482,8 @@ def _check_run_manifest(out_path: str, want: dict) -> None:
     sets. So the first run persists its parameters and every re-run
     must present the same ones or fail loudly naming the mismatch
     (delete ``out_path`` to start over)."""
-    mpath = os.path.join(out_path, MANIFEST_FILE)
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            have = json.load(f)
+    if os.path.exists(os.path.join(out_path, MANIFEST_FILE)):
+        have = read_meta(out_path, MANIFEST_FILE)
         if have != want:
             diffs = sorted(
                 k
@@ -564,9 +521,7 @@ def _check_run_manifest(out_path: str, want: dict) -> None:
                 f"parameters and cannot be safely resumed; delete "
                 f"{out_path} to start a fresh run"
             )
-    os.makedirs(out_path, exist_ok=True)
-    with open(mpath, "w") as f:
-        json.dump(want, f, sort_keys=True)
+    write_meta(out_path, MANIFEST_FILE, want)
 
 
 def _reclaim_slice_scratch(spark: SparkSession, before: set[str]) -> set[str]:
@@ -773,7 +728,6 @@ def band_store_candidates_bounded(
     whose n·bands collision exchange exceeds local/per-wave disk.
     Pair set is identical to ``_collision_pairs`` over the full store
     (the slices partition the join exactly)."""
-    _recover_staged(os.path.join(path, BAND_DIR))
     _check_layout(path, BAND_META, BAND_DIR, "minhash band store")
     meta = load_band_store_meta(path)
     banded = _read_store_parquet(spark, path, BAND_DIR).select(
@@ -799,7 +753,6 @@ def srp_store_candidates_bounded(
     """The SRP twin of :func:`band_store_candidates_bounded`:
     candidate pairs from the persisted (band, bucket) rows, collision
     join sliced on the bucket hash."""
-    _recover_staged(os.path.join(path, SRP_DIR))
     _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
     meta = load_srp_store_meta(path)
     banded = _read_store_parquet(spark, path, SRP_DIR).select(
@@ -841,7 +794,6 @@ def band_store_pairs_bounded(
         token_sets,
     )
 
-    _recover_staged(os.path.join(path, BAND_DIR))
     _check_layout(path, BAND_META, BAND_DIR, "minhash band store")
     meta = load_band_store_meta(path)
     banded = _read_store_parquet(spark, path, BAND_DIR).select(
@@ -890,7 +842,6 @@ def srp_store_pairs_bounded(
         _verify_cosine_pairs,
     )
 
-    _recover_staged(os.path.join(path, SRP_DIR))
     _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
     meta = load_srp_store_meta(path)
     banded = _read_store_parquet(spark, path, SRP_DIR).select(
@@ -978,7 +929,6 @@ def srp_store_pairs_bucket_verify(
     import numpy as np
     import pandas as pd
 
-    _recover_staged(os.path.join(path, SRP_DIR))
     _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
     meta = load_srp_store_meta(path)
     vecs = docs.select(
@@ -1269,14 +1219,12 @@ def build_srp_store(
     _write_layout(os.path.join(path, SRP_DIR), meta["layout_token"])
     if with_pairs:
         _write_layout(os.path.join(path, SRP_PAIR_DIR), meta["layout_token"])
-    with open(os.path.join(path, SRP_META), "w") as f:
-        json.dump(meta, f)
+    write_meta(path, SRP_META, meta)
     return meta
 
 
 def load_srp_store_meta(path: str) -> dict:
-    with open(os.path.join(path, SRP_META)) as f:
-        return json.load(f)
+    return read_meta(path, SRP_META)
 
 
 def append_srp_keys(
@@ -1333,7 +1281,6 @@ def probe_srp_near_duplicates(
     (:data:`SRP_BITS_PER_BAND`). Hits deduplicate on (vec_id, band,
     bucket, existing_id) before counting, so replayed appends and
     compaction cannot change any probe field."""
-    _recover_staged(os.path.join(path, SRP_DIR))
     _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
     meta = load_srp_store_meta(path)
     banded = _srp_rows(
@@ -1395,7 +1342,6 @@ def srp_store_pairs(
         _verify_cosine_pairs,
     )
 
-    _recover_staged(os.path.join(path, SRP_DIR))
     _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
     meta = load_srp_store_meta(path)
     banded = _read_store_parquet(spark, path, SRP_DIR).select(
@@ -1428,7 +1374,6 @@ def compact_srp_store(
     with hold_lease(path, "compact-srp", wait_s=wait_s):
         meta = load_srp_store_meta(path)
         dest = os.path.join(path, SRP_DIR)
-        _recover_staged(dest)
         _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
         df = spark.read.parquet(dest)
         _staged_rewrite(
@@ -1450,189 +1395,6 @@ def compact_srp_store(
 
 
 # ---------------------------------------------------------- compaction
-
-
-#: how long a reader waits out a LIVE compactor's swap window (two
-#: renames — microseconds in practice) before giving up with the
-#: clean retryable StoreBusyError.
-_READER_SWAP_WAIT_S = 5.0
-
-
-def _recover_staged(dest: str) -> None:
-    """Automated recovery for :func:`_staged_rewrite`'s crash window: a
-    compaction that died strictly BETWEEN its two renames leaves the
-    store directory absent with the data alive only in
-    ``<dest>.compact_old`` — rename it back so the next probe/compact
-    proceeds instead of failing path-not-found. Called at the top of
-    every probe and compact; a no-op in the healthy state.
-
-    Reader-vs-maintenance contract (VERDICT r8 #5): the same missing-
-    dir state is also what a probe sees if it lands INSIDE a live
-    compactor's swap window. Repairing then would undo the live
-    swap's first rename and crash the compactor's second. So recovery
-    is lease-aware: when another process's lease is LIVE, a reader
-    waits out the (microseconds-long) window and proceeds against the
-    new directory; if it doesn't close within ``_READER_SWAP_WAIT_S``
-    the reader raises the clean, retryable ``StoreBusyError`` —
-    never a partial read, never a repair under a live holder. Only a
-    dead lease (or our own maintenance hold) repairs."""
-    import time as _time
-
-    old = dest + ".compact_old"
-    if os.path.exists(dest) or not os.path.exists(old):
-        return
-    store_root = os.path.dirname(dest)
-    from dragnet_spark.index.lease import (
-        StoreBusyError,
-        held_by_this_thread,
-        lease_is_live,
-    )
-
-    if not held_by_this_thread(store_root):
-        deadline = _time.monotonic() + _READER_SWAP_WAIT_S
-        while lease_is_live(store_root):
-            if os.path.exists(dest):
-                return  # live maintenance finished its swap
-            if _time.monotonic() >= deadline:
-                raise StoreBusyError(
-                    f"store {store_root!r} is mid-maintenance (a live "
-                    f"job holds its lease and the directory swap "
-                    f"hasn't landed after {_READER_SWAP_WAIT_S:.0f}s); "
-                    f"no data was read or modified — retry the probe "
-                    f"after the maintenance job finishes."
-                )
-            _time.sleep(0.05)
-        if os.path.exists(dest) or not os.path.exists(old):
-            return  # resolved while we watched the lease
-    # crashed compactor (or our own held maintenance): repair. Two
-    # readers can race here — exactly one rename wins; the loser just
-    # needs dest to exist afterwards.
-    try:
-        os.rename(old, dest)
-    except OSError:
-        if not os.path.exists(dest):
-            raise
-
-
-def _is_benign_swap_read_error(e: Exception) -> bool:
-    """True when a plan-time parquet read failed because files it had
-    just listed vanished — the signature of a maintenance directory
-    swap racing the read, never of a wrong answer (no data row was
-    produced). Matched by message because the shape arrives as a
-    py4j-wrapped Java cause chain."""
-    msg = str(e)
-    return (
-        "FileNotFoundException" in msg
-        or "FILE_NOT_EXIST" in msg
-        or "FAILED_READ_FILE" in msg
-        or "PATH_NOT_FOUND" in msg
-    )
-
-
-def _read_store_parquet(spark: SparkSession, store_root: str, data_dir: str):
-    """Plan-time parquet read of a store data dir that keeps the reader
-    contract under concurrent maintenance.
-
-    ``spark.read.parquet`` eagerly lists files and reads footers for
-    schema inference (a distributed job on this Spark) — a compactor
-    swapping the directory between the listing and the footer reads
-    surfaces as a raw FileNotFoundException job failure, which is
-    neither of the two retryable shapes the probe contract documents
-    (typed StoreBusyError, or task-time FAILED_READ_FILE from a plan
-    bound before the swap). Apply :func:`_recover_staged`'s lease
-    discipline to that third, plan-time shape: retry while the LIVE
-    holder's swap settles (the post-swap directory is immediately
-    readable, so one retry normally succeeds), raise the retryable
-    ``StoreBusyError`` if the window won't close, and never mask the
-    error when no maintenance is involved — vanished files with no
-    live lease get exactly one recovery pass (the holder may have
-    finished — or crashed mid-swap, the state ``_recover_staged``
-    repairs) before the original error propagates."""
-    import time as _time
-
-    from dragnet_spark.index.lease import (
-        StoreBusyError,
-        held_by_this_thread,
-        lease_is_live,
-    )
-
-    dest = os.path.join(store_root, data_dir)
-    deadline = _time.monotonic() + _READER_SWAP_WAIT_S
-    retried_quiet = False
-    while True:
-        try:
-            return spark.read.parquet(dest)
-        except Exception as e:  # noqa: BLE001 — filtered just below
-            if not _is_benign_swap_read_error(e):
-                raise
-            if held_by_this_thread(store_root):
-                # our own maintenance read a file that vanished: a real
-                # bug (the holder is the only writer), never a race
-                raise
-            if lease_is_live(store_root):
-                if _time.monotonic() >= deadline:
-                    raise StoreBusyError(
-                        f"store {store_root!r} is mid-maintenance (a "
-                        f"live job holds its lease and its directory "
-                        f"swap kept racing this read for "
-                        f"{_READER_SWAP_WAIT_S:.0f}s); no data was "
-                        f"read — retry the probe after the maintenance "
-                        f"job finishes."
-                    ) from e
-                _time.sleep(0.05)
-                continue
-            if retried_quiet:
-                raise
-            retried_quiet = True
-            _recover_staged(dest)
-
-
-def _staged_rewrite(
-    df,
-    part_col: str,
-    dest: str,
-    key_col: str,
-    files_per_partition: int = 1,
-) -> None:
-    """Stage-then-swap rewrite (index/build.compact_index discipline):
-    Spark cannot overwrite the parquet tree it is reading, so write to
-    ``<dest>.compact_tmp`` beside the store (same filesystem), then
-    swap directories.
-
-    ``files_per_partition`` bounds output files per partition dir by
-    routing each (partition, key-hash slice) to one task. The default
-    1 is right locally and for the 256-bucket fp store; for the 8-way
-    band store at real scale, pass enough slices that a slice is one
-    task's worth of data — one file per band would funnel 1/8 of the
-    store through a single task."""
-    import shutil
-
-    stage = dest + ".compact_tmp"
-    old = dest + ".compact_old"
-    _recover_staged(dest)
-    # a previous compaction that crashed before its first rename can
-    # leave either sibling behind; clear them so the swap cannot fail
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    slice_col = F.pmod(
-        F.xxhash64(F.col(key_col)), F.lit(files_per_partition)
-    )
-    try:
-        (
-            df.repartition(F.col(part_col), slice_col)
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(stage)
-        )
-        # a compactor that stalled past its TTL may have had its lease
-        # stolen by a live appender — fail loudly BEFORE the swap
-        # rather than clobber the thief's appends (lease.py contract)
-        ensure_lease(os.path.dirname(dest))
-        os.rename(dest, old)
-        os.rename(stage, dest)
-        shutil.rmtree(old, ignore_errors=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 def compact_fingerprint_store(
@@ -1660,7 +1422,6 @@ def _compact_fingerprint_store_locked(
     spark: SparkSession, path: str, files_per_partition: int
 ) -> None:
     dest = os.path.join(path, STORE_DIR)
-    _recover_staged(dest)
     _check_layout(path, FP_META, STORE_DIR, "fingerprint store")
     _check_fp_algo(path)
     df = spark.read.parquet(dest)
@@ -1678,18 +1439,15 @@ def _compact_fingerprint_store_locked(
     # _check_fp_algo guarantees meta's token == _fp_token() when meta
     # has one; a pre-token store gets today's token plus a meta upgrade
     # so the pair stays in sync.
-    meta_path = os.path.join(path, FP_META)
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
+    if os.path.exists(os.path.join(path, FP_META)):
+        meta = read_meta(path, FP_META)
     else:
         meta = {"version": "1.0", "algo": _FP_ALGO}
     tok = meta.get("layout_token") or _fp_token()
     _write_layout(dest, tok)
     if not meta.get("layout_token"):
         meta["layout_token"] = tok
-        with open(meta_path, "w") as f:
-            json.dump(meta, f)
+        write_meta(path, FP_META, meta)
 
 
 def compact_band_store(
@@ -1713,7 +1471,6 @@ def compact_band_store(
     Lease-serialized against live appenders (lease.py)."""
     with hold_lease(path, "compact-band", wait_s=wait_s):
         dest = os.path.join(path, BAND_DIR)
-        _recover_staged(dest)
         _check_layout(path, BAND_META, BAND_DIR, "minhash band store")
         meta = load_band_store_meta(path)
         df = spark.read.parquet(dest)

@@ -21,23 +21,26 @@ Layout (marker-file convention of index/maintain.py):
                                 per group; partitioned by nothing
                                 (state is sketch-sized by design)
 
-Merges are lease-serialized (index/lease.py) and stage-then-swap like
-every other store rewrite, so a reader mid-merge sees the old sketch
-or the new one, never a partial directory; a merger that stalls past
-its lease TTL fails loudly before the swap (ensure_lease) instead of
-clobbering a thief's fold.
+Merges are lease-serialized and rewrite ``sketch/`` through the
+shared stage-and-swap; the marker, swap and reader contract are
+index/store.py's.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dragnet_spark.index.lease import ensure_lease, hold_lease
+from dragnet_spark.index.lease import hold_lease
+from dragnet_spark.index.store import (
+    _read_store_parquet,
+    _recover_staged,
+    _stage_and_swap,
+    read_meta,
+    write_meta,
+)
 from dragnet_spark.ops.sketch import (
     bottom_k,
     estimate_from_sketch,
@@ -49,13 +52,8 @@ KMV_META = "_kmv_store.json"
 SKETCH_DIR = "sketch"
 
 
-def _meta_path(path: str) -> str:
-    return os.path.join(path, KMV_META)
-
-
 def load_kmv_meta(path: str) -> dict:
-    with open(_meta_path(path)) as f:
-        return json.load(f)
+    return read_meta(path, KMV_META)
 
 
 def build_kmv_store(
@@ -67,20 +65,19 @@ def build_kmv_store(
     k: int = 256,
 ) -> None:
     """Materialize the bottom-k sketch of ``df`` at ``path``."""
-    os.makedirs(path, exist_ok=True)
     sk = kmv_sketch_rows(df, value_col, list(group_cols), k)
     sk.write.mode("overwrite").parquet(os.path.join(path, SKETCH_DIR))
-    with open(_meta_path(path), "w") as f:
-        json.dump(
-            {
-                "version": "1.0",
-                "k": k,
-                "value_col": value_col,
-                "group_cols": list(group_cols),
-                "algo": "md5-prefix-60bit",
-            },
-            f,
-        )
+    write_meta(
+        path,
+        KMV_META,
+        {
+            "version": "1.0",
+            "k": k,
+            "value_col": value_col,
+            "group_cols": list(group_cols),
+            "algo": "md5-prefix-60bit",
+        },
+    )
 
 
 def merge_kmv_batch(spark: SparkSession, df: DataFrame, path: str) -> None:
@@ -93,26 +90,21 @@ def merge_kmv_batch(spark: SparkSession, df: DataFrame, path: str) -> None:
     dest = os.path.join(path, SKETCH_DIR)
     with hold_lease(path, "kmv-merge"):
         batch = kmv_sketch_rows(df, vcol, gcols, k)
+        _recover_staged(dest)
         cur = spark.read.parquet(dest).select(*gcols, "h")
         merged = bottom_k(cur.unionByName(batch), gcols, k)
-        stage, old = dest + ".compact_tmp", dest + ".compact_old"
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        try:
-            merged.coalesce(1).write.mode("overwrite").parquet(stage)
-            ensure_lease(path)
-            os.rename(dest, old)
-            os.rename(stage, dest)
-            shutil.rmtree(old, ignore_errors=True)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+        _stage_and_swap(
+            dest,
+            lambda stage: merged.coalesce(1).write.mode("overwrite")
+            .parquet(stage),
+        )
 
 
 def kmv_store_estimate(spark: SparkSession, path: str) -> DataFrame:
     """(group..., est_distinct) read off the persisted sketch — no
     corpus scan, no shuffle beyond the ≤ groups·k stored rows."""
     meta = load_kmv_meta(path)
-    sk = spark.read.parquet(os.path.join(path, SKETCH_DIR))
+    sk = _read_store_parquet(spark, path, SKETCH_DIR)
     return estimate_from_sketch(sk, meta["group_cols"], meta["k"])
 
 
@@ -126,7 +118,7 @@ def kmv_store_contains(
     (group..., n_probed, n_known_minima)."""
     meta = load_kmv_meta(path)
     gcols, vcol = meta["group_cols"], meta["value_col"]
-    sk = spark.read.parquet(os.path.join(path, SKETCH_DIR))
+    sk = _read_store_parquet(spark, path, SKETCH_DIR)
     rows = (
         df.select(*gcols, kmv_hash(vcol).alias("h"))
         .filter(F.col("h").isNotNull())  # NULL values never enter a sketch

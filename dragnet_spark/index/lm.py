@@ -53,12 +53,12 @@ from __future__ import annotations
 
 from dragnet_spark.errors import ContractError
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dragnet_spark.index.store import read_meta, write_meta
 from dragnet_spark.ops import spread
 from dragnet_spark.ops.text import tokens
 
@@ -123,16 +123,12 @@ def build_lm_store(
         "min_count": min_count,
         "lam_pct": lam_pct,
     }
-    tmp = os.path.join(path, LM_MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, LM_MARKER))
+    write_meta(path, LM_MARKER, meta)
     return meta
 
 
 def load_lm_meta(path: str) -> dict:
-    with open(os.path.join(path, LM_MARKER)) as f:
-        return json.load(f)
+    return read_meta(path, LM_MARKER)
 
 
 def score_against_lm_store(

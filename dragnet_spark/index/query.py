@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from dragnet_spark.fieldspec import Breakdown
 from dragnet_spark.index.build import BUCKET_COL, INDEX_META_FILE, Metric
+from dragnet_spark.index.store import read_meta
 from dragnet_spark.krill import compile_predicate, predicate_fields
 from dragnet_spark.query import QueryConfig
 from dragnet_spark.scan import VALUE_COL
@@ -51,8 +52,7 @@ def _canonical(pred: Any) -> str:
 
 
 def load_index_meta(index_path: str) -> dict:
-    with open(os.path.join(index_path, INDEX_META_FILE)) as f:
-        return json.load(f)
+    return read_meta(index_path, INDEX_META_FILE)
 
 
 def _breakdown_compatible(qb: Breakdown, mb: Breakdown) -> bool:

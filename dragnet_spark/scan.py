@@ -337,11 +337,10 @@ def scan_ndjson(
     replaces schema inference (which would be a second full read of the
     data — untenable at 100 TB).
     """
-    txt = spark.read.option("recursiveFileLookup", "true").text(paths)
-    df = (
-        txt.filter(F.trim(F.col("value")) != "")
-        .select(F.try_parse_json(F.col("value")).alias(VARIANT_COL))
-        .filter(F.col(VARIANT_COL).isNotNull())
+    from dragnet_spark.sources.ndjson import variant_lines
+
+    df = variant_lines(
+        spark.read.option("recursiveFileLookup", "true").text(paths)
     )
     return scan(
         df, query, datasource_filter=datasource_filter, resolver=VariantResolver()

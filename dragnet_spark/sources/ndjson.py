@@ -21,7 +21,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dragnet_spark.scan import VARIANT_COL
+
 CORRUPT_COL = "_corrupt_record"
+
+
+def variant_lines(txt: DataFrame) -> DataFrame:
+    """Text lines (a ``value`` column, batch or streaming) → one
+    variant column: blank lines skipped, corrupt lines (``try_parse_json``
+    → NULL) dropped. The one line→variant rule of the raw-NDJSON
+    datasource, ``scan_ndjson`` and ``read_ndjson_stream`` — a single
+    pass, no schema-inference read."""
+    return (
+        txt.filter(F.trim(F.col("value")) != "")
+        .select(F.try_parse_json(F.col("value")).alias(VARIANT_COL))
+        .filter(F.col(VARIANT_COL).isNotNull())
+    )
 
 
 def read_ndjson(

@@ -41,6 +41,7 @@ from dragnet_spark.scan import (
     VariantResolver,
     breakdown_column,
 )
+from dragnet_spark.sources.ndjson import variant_lines
 
 EVENT_TIME_COL = "__dn_event_time"
 
@@ -88,12 +89,7 @@ def read_ndjson_stream(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    txt = reader.load(path)
-    return (
-        txt.filter(F.trim(F.col("value")) != "")
-        .select(F.try_parse_json(F.col("value")).alias(VARIANT_COL))
-        .filter(F.col(VARIANT_COL).isNotNull())
-    )
+    return variant_lines(reader.load(path))
 
 
 def stream_scan(
@@ -830,18 +826,14 @@ def make_live_store_ingester(
     # sink marker: records which store's lease/ledger governs this
     # sink, so maintenance (streaming/sink.compact_sink, dn maintain)
     # and the guarded reader find the store without configuration
-    import json as _json
-
+    from dragnet_spark.index.store import write_meta
     from dragnet_spark.streaming.sink import SINK_MARKER
 
-    _os.makedirs(sink_path, exist_ok=True)
-    _marker_path = _os.path.join(sink_path, SINK_MARKER)
-    if not _os.path.exists(_marker_path):
-        with open(_marker_path, "w") as f:
-            _json.dump(
-                {"version": "1.0",
-                 "store_path": _os.path.abspath(store_path)}, f
-            )
+    if not _os.path.exists(_os.path.join(sink_path, SINK_MARKER)):
+        write_meta(
+            sink_path, SINK_MARKER,
+            {"version": "1.0", "store_path": _os.path.abspath(store_path)},
+        )
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         marker = None
@@ -1354,10 +1346,10 @@ def make_live_components_ingester(
         BAND_DIR,
         BAND_META,
         _banded_rows,
-        _check_layout,
         load_band_store_meta,
     )
     from dragnet_spark.index.lease import hold_lease
+    from dragnet_spark.index.store import _check_layout
 
     ckpt_key = hashlib.sha256((checkpoint or "").encode()).hexdigest()[:12]
     ledger = None

@@ -38,8 +38,8 @@ cost grows without limit. This module is the missing maintenance leg:
   ``spark.read.parquet(sink)``. :func:`read_curated_sink` is the
   contract-following reader: it waits out a LIVE compactor's swap
   (store lease + swap marker), repairs a DEAD one, and raises the
-  retryable ``StoreBusyError`` — never a partial read — mirroring
-  the store-side ``_recover_staged`` posture.
+  retryable ``StoreBusyError`` — never a partial read — the reader
+  contract of index/store.py.
 
 Writer concurrency: the whole compaction holds the STORE lease — the
 same lease every live-ingest batch holds — so folding never races a
@@ -48,7 +48,6 @@ batch's sink write or fold-in.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import shutil
@@ -56,6 +55,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from dragnet_spark.index.lease import hold_lease
+from dragnet_spark.index.store import _wait_out_live_swap, read_meta, write_meta
 
 SINK_MARKER = "_dn_sink.json"
 SEGMENT_MANIFEST = "_dn_compacted"
@@ -63,8 +63,6 @@ _STAGE = ".dn_compact_stage"
 _TRASH = ".dn_compact_trash"
 _SWAP = ".dn_compact_swap"
 _BATCH_RE = re.compile(r"^__dn_batch=(-?\d+)$")
-#: how long the guarded reader waits out a live compactor's swap.
-_READER_SWAP_WAIT_S = 5.0
 
 
 def _batch_dirs(sink_path: str) -> dict[int, str]:
@@ -82,8 +80,7 @@ def _batch_dirs(sink_path: str) -> dict[int, str]:
 
 
 def load_sink_marker(sink_path: str) -> dict:
-    with open(os.path.join(sink_path, SINK_MARKER)) as f:
-        return json.load(f)
+    return read_meta(sink_path, SINK_MARKER)
 
 
 def _recover_sink(sink_path: str) -> None:
@@ -93,8 +90,7 @@ def _recover_sink(sink_path: str) -> None:
     swap = os.path.join(sink_path, _SWAP)
     trash = os.path.join(sink_path, _TRASH)
     if os.path.exists(swap):
-        with open(swap) as f:
-            info = json.load(f)
+        info = read_meta(sink_path, _SWAP)
         target = os.path.join(sink_path, info["target"])
         manifest = os.path.join(stage, SEGMENT_MANIFEST)
         if os.path.exists(stage) and os.path.exists(manifest):
@@ -189,17 +185,14 @@ def compact_sink(
         else:
             df = df.repartition(files_per_segment)
         df.write.mode("overwrite").parquet(stage)
-        with open(os.path.join(stage, SEGMENT_MANIFEST), "w") as f:
-            json.dump(
-                {"sources": safe, "rows": n_rows, "target": target}, f
-            )
+        write_meta(
+            stage, SEGMENT_MANIFEST,
+            {"sources": safe, "rows": n_rows, "target": target},
+        )
         # point of no return: after the marker lands, recovery rolls
         # FORWARD; before it, the invisible stage just gets deleted
+        write_meta(sink_path, _SWAP, {"target": target, "sources": safe})
         swap = os.path.join(sink_path, _SWAP)
-        tmp = swap + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"target": target, "sources": safe}, f)
-        os.replace(tmp, swap)
         trash = os.path.join(sink_path, _TRASH)
         os.makedirs(trash, exist_ok=True)
         for name in safe:
@@ -219,34 +212,19 @@ def read_curated_sink(
 ) -> DataFrame:
     """Contract-following sink reader: returns the sink DataFrame,
     never a partial view. A LIVE compactor's swap window (store lease
-    held, ``.dn_compact_swap`` present) is waited out up to
-    ``_READER_SWAP_WAIT_S`` then raises the retryable
-    ``StoreBusyError``; a DEAD compactor's crash state is repaired
-    under the store lease before reading."""
-    import time as _time
-
-    from dragnet_spark.index.lease import (
-        StoreBusyError,
-        lease_is_live,
-    )
-
+    held, ``.dn_compact_swap`` or the stage present) is waited out as
+    index/store.py's readers wait out a directory swap, then raises the
+    retryable ``StoreBusyError``; a DEAD compactor's crash state is
+    repaired under the store lease before reading."""
     swap = os.path.join(sink_path, _SWAP)
     stage = os.path.join(sink_path, _STAGE)
-    if os.path.exists(swap) or os.path.exists(stage):
+
+    def idle() -> bool:
+        return not (os.path.exists(swap) or os.path.exists(stage))
+
+    if not idle():
         store_path = store_path or load_sink_marker(sink_path)["store_path"]
-        deadline = _time.monotonic() + _READER_SWAP_WAIT_S
-        while lease_is_live(store_path):
-            if not (os.path.exists(swap) or os.path.exists(stage)):
-                break  # live maintenance finished its swap
-            if _time.monotonic() >= deadline:
-                raise StoreBusyError(
-                    f"sink {sink_path!r} is mid-compaction (a live job "
-                    f"holds the store lease and the swap hasn't landed "
-                    f"after {_READER_SWAP_WAIT_S:.0f}s); no data was "
-                    f"read — retry after the maintenance job finishes."
-                )
-            _time.sleep(0.05)
-        else:
+        if not _wait_out_live_swap(store_path, idle, f"sink {sink_path!r}"):
             # lease dead with leftover state: crashed compactor —
             # repair before reading (serialized via the lease)
             with hold_lease(store_path, "sink-reader-repair"):

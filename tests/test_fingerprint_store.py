@@ -338,10 +338,10 @@ def test_band_layout_mismatch_raises(spark, band_store):
 
     from dragnet_spark.index.fingerprints import (
         BAND_DIR,
-        LAYOUT_FILE,
         append_band_keys,
         probe_near_duplicates,
     )
+    from dragnet_spark.index.store import LAYOUT_FILE
 
     with open(os.path.join(band_store, BAND_DIR, LAYOUT_FILE), "w") as f:
         f.write("0000000000000000")  # stale data dir, fresh meta
@@ -416,6 +416,94 @@ def test_staged_rewrite_interrupted_swap_recovers(spark, store):
         for r in probe_new_documents(spark, store, batch).collect()
     }
     assert out2 == out
+
+
+def _kmv_kind(spark, path):
+    from dragnet_spark.index.kmv import (
+        build_kmv_store,
+        kmv_store_estimate,
+        merge_kmv_batch,
+    )
+
+    docs = spark.createDataFrame(
+        [("s%d" % (i % 2), "tok%d" % (i % 40)) for i in range(100)],
+        "src string, tok string",
+    )
+    build_kmv_store(spark, docs, path, "tok", ["src"], k=16)
+    # re-folding already-stored values leaves the bottom-k unchanged
+    return (
+        "sketch",
+        lambda: sorted(map(tuple, kmv_store_estimate(spark, path).collect())),
+        lambda: merge_kmv_batch(spark, docs, path),
+    )
+
+
+def _components_kind(spark, path):
+    from dragnet_spark.index.components import (
+        build_components_store,
+        components_store_read,
+        merge_components_batch,
+    )
+
+    ids = spark.createDataFrame([(i,) for i in range(6)], "id long")
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (4, 5)], "id_a long, id_b long"
+    )
+    build_components_store(spark, ids, pairs, path)
+    # re-folding a stored pair is idempotent
+    return (
+        "labels",
+        lambda: sorted(map(tuple, components_store_read(spark, path).collect())),
+        lambda: merge_components_batch(spark, pairs.limit(1), path),
+    )
+
+
+def _vindex_kind(spark, path):
+    from dragnet_spark.index.vector import (
+        append_vector_index,
+        build_vector_index,
+        query_vector_index,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
+    build_vector_index(spark, vecs, path, n_centroids=2, seed=1)
+    queries = vecs.filter(F.col("vec_id") < 3)
+    return (
+        "vectors",
+        lambda: sorted(
+            map(tuple, query_vector_index(spark, path, queries, k=3).collect())
+        ),
+        lambda: append_vector_index(spark, vecs.limit(0), path),
+    )
+
+
+@pytest.mark.parametrize(
+    "kind", [_kmv_kind, _components_kind, _vindex_kind],
+    ids=["kmv", "components", "vindex"],
+)
+def test_every_swapped_kind_recovers_interrupted_swap(spark, tmp_path, kind):
+    """The crash window of test_staged_rewrite_interrupted_swap_recovers
+    for every other store that stage-and-swaps a data dir: with no
+    live lease, the dir renamed to <dir>.compact_old must be repaired
+    by the next plain read AND by the next merge/append, each of which
+    returns the pre-crash answer."""
+    import os
+
+    path = str(tmp_path / "store")
+    data_dir, read, write = kind(spark, path)
+    dest = os.path.join(path, data_dir)
+    before = read()
+    assert before
+    os.rename(dest, dest + ".compact_old")  # the crash window
+    assert read() == before
+    assert os.path.exists(dest)
+    os.rename(dest, dest + ".compact_old")
+    write()
+    assert read() == before
+    assert not os.path.exists(dest + ".compact_old")
 
 
 def test_probe_count_hint_skips_gate(spark, store):
@@ -608,12 +696,13 @@ def test_fp_algo_drift_raises_and_compact_keeps_meta_token(
 
     from dragnet_spark import index as _idx  # noqa: F401
     from dragnet_spark.index import fingerprints as fps
+    from dragnet_spark.index.store import LAYOUT_FILE
 
     # healthy store: compact leaves meta and disk token in agreement
     fps.compact_fingerprint_store(spark, store)
     with open(os.path.join(store, fps.FP_META)) as f:
         meta_tok = json.load(f)["layout_token"]
-    with open(os.path.join(store, fps.STORE_DIR, fps.LAYOUT_FILE)) as f:
+    with open(os.path.join(store, fps.STORE_DIR, LAYOUT_FILE)) as f:
         assert f.read().strip() == meta_tok
 
     # simulate an algo bump in the CODE while the store stays stale

@@ -73,7 +73,8 @@ def _sections(path=GOLDEN):
     return out
 
 
-SECTIONS = _sections()
+# read only when present, so the module skips (not errors) without it
+SECTIONS = _sections() if os.path.exists(GOLDEN) else []
 
 
 @pytest.fixture(scope="module")

@@ -338,6 +338,7 @@ def test_probe_raises_clean_retryable_when_window_sticks(
     spark, tmp_path, monkeypatch
 ):
     from dragnet_spark.index import fingerprints as fps
+    from dragnet_spark.index import store as storemod
     from dragnet_spark.index.lease import StoreBusyError
 
     store, batch = _fp_store(spark, tmp_path, "pstore2")
@@ -345,7 +346,7 @@ def test_probe_raises_clean_retryable_when_window_sticks(
     old = dest + ".compact_old"
     _fake_live_lease(store)
     os.rename(dest, old)
-    monkeypatch.setattr(fps, "_READER_SWAP_WAIT_S", 0.5)
+    monkeypatch.setattr(storemod, "_READER_SWAP_WAIT_S", 0.5)
     with pytest.raises(StoreBusyError, match="retry"):
         fps.probe_new_documents(spark, store, batch).collect()
     # nothing repaired, nothing clobbered: the maintenance state is
@@ -466,7 +467,7 @@ def _benign():
 
 
 def test_read_store_parquet_passthrough(tmp_path):
-    from dragnet_spark.index.fingerprints import _read_store_parquet
+    from dragnet_spark.index.store import _read_store_parquet
 
     fake = _FakeSpark([])
     assert _read_store_parquet(fake, str(tmp_path), "data") == "DF"
@@ -474,7 +475,7 @@ def test_read_store_parquet_passthrough(tmp_path):
 
 
 def test_read_store_parquet_non_benign_raises_immediately(tmp_path):
-    from dragnet_spark.index.fingerprints import _read_store_parquet
+    from dragnet_spark.index.store import _read_store_parquet
 
     fake = _FakeSpark([ValueError("schema mismatch: not a race")])
     with pytest.raises(ValueError, match="not a race"):
@@ -485,7 +486,7 @@ def test_read_store_parquet_non_benign_raises_immediately(tmp_path):
 def test_read_store_parquet_quiet_store_gets_one_recovery_pass(tmp_path):
     """No live lease: vanished files are NOT masked — one recovery
     retry (the crashed-mid-swap repair), then the original shape."""
-    from dragnet_spark.index.fingerprints import _read_store_parquet
+    from dragnet_spark.index.store import _read_store_parquet
 
     fake = _FakeSpark([_benign(), _benign()])
     with pytest.raises(Exception, match="FileNotFoundException"):
@@ -496,7 +497,7 @@ def test_read_store_parquet_quiet_store_gets_one_recovery_pass(tmp_path):
 def test_read_store_parquet_retries_through_live_swap(tmp_path):
     """Another holder's live lease: the benign shape retries until the
     swap settles and the probe SUCCEEDS (no error escapes)."""
-    from dragnet_spark.index.fingerprints import _read_store_parquet
+    from dragnet_spark.index.store import _read_store_parquet
 
     p = str(tmp_path / "store")
     os.makedirs(p)
@@ -512,17 +513,17 @@ def test_read_store_parquet_retries_through_live_swap(tmp_path):
 def test_read_store_parquet_busy_when_swap_never_settles(
     tmp_path, monkeypatch
 ):
-    from dragnet_spark.index import fingerprints
+    from dragnet_spark.index import store as storemod
     from dragnet_spark.index.lease import StoreBusyError
 
-    monkeypatch.setattr(fingerprints, "_READER_SWAP_WAIT_S", 0.3)
+    monkeypatch.setattr(storemod, "_READER_SWAP_WAIT_S", 0.3)
     p = str(tmp_path / "store")
     os.makedirs(p)
     tok = acquire_lease_other_thread(p, wait_s=1)
     try:
         fake = _FakeSpark([_benign()] * 100)
         with pytest.raises(StoreBusyError, match="mid-maintenance"):
-            fingerprints._read_store_parquet(fake, p, "data")
+            storemod._read_store_parquet(fake, p, "data")
     finally:
         release_lease(p, tok)
 
@@ -530,7 +531,7 @@ def test_read_store_parquet_busy_when_swap_never_settles(
 def test_read_store_parquet_own_maintenance_never_masks(tmp_path):
     """The lease holder reading its own store: a vanished file is a
     real bug, raised immediately (the holder is the only writer)."""
-    from dragnet_spark.index.fingerprints import _read_store_parquet
+    from dragnet_spark.index.store import _read_store_parquet
 
     p = str(tmp_path / "store")
     os.makedirs(p)
@@ -547,7 +548,7 @@ def test_read_store_parquet_repairs_crashed_swap_midflight(
     """Integration: dest swapped away mid-probe with a DEAD lease (the
     crashed-compactor state) — the helper's recovery pass renames
     .compact_old back and the retry returns real rows."""
-    from dragnet_spark.index.fingerprints import _read_store_parquet
+    from dragnet_spark.index.store import _read_store_parquet
 
     p = str(tmp_path / "store")
     dest = os.path.join(p, "data")
