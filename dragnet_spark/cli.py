@@ -7,18 +7,24 @@ argument errors), and output formats (fixed-width datasource/metric
 listings, bin/dn:421-489,572-614; scan/query output via
 dragnet_spark.output.format).
 
-Commands:
-  datasource-add|-update|-remove|-list|-show
-  metric-add|-list|-remove
-  scan   — aggregate raw data        (bin/dn:869-896)
-  build  — materialize index views   (bin/dn:640-694)
-  query  — answer from index views   (bin/dn:837-864)
-  index-config — print the effective index definition (bin/dn:729-749)
-  index-scan   — emit the per-metric aggregated points a build would
-                 index, tagged __dn_metric (the distributed map phase,
-                 lib/datasource-manta.js:36-62)
-  index-read   — build index views from pre-aggregated points on stdin
-                 (the distributed reduce phase, lib/datasource-file.js:729-746)
+Each verb is declared once, with ``@verb(name, nargs, options)``
+(COMMANDS holds the declarations):
+
+  nargs    the exact number of positionals
+  options  option name → (type, default). The type is str, int, float,
+           list (repeatable; the values collect in order), a converter
+           such as _filter (a JSON document), or FLAG (present or
+           absent, never given a value; declared with default False).
+           The default is the value an absent option takes; None
+           leaves it out of the parsed options, and REQUIRED makes it
+           mandatory.
+
+_parse_args turns argv into (positionals, typed options) before the
+verb runs. An unknown option, a missing required option, a badly typed
+value, a flag given a value or a wrong positional count is a usage
+error: "dn: <message>" and the usage line on stderr, exit status 2.
+Rules that tie options together (--bounded needs --out, trustrank
+needs --seeds, the --mode and --op choices) stay in the verb bodies.
 
 A SparkSession is only created for the commands that touch data;
 config CRUD is instant.
@@ -26,9 +32,11 @@ config CRUD is instant.
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 import json
 import sys
-from typing import Any
+from typing import Any, Callable, NamedTuple
 
 from dragnet_spark.config import (
     Catalog,
@@ -56,114 +64,132 @@ class FatalError(Exception):
 
 # ------------------------------------------------------------ option parsing
 
-# name → (takes_value, default); shorts per the reference option table
-_OPT_DEFS = {
-    "after": True, "assetroot": True, "backend": True, "before": True,
-    "breakdowns": True, "counters": False, "data-format": True,
-    "dry-run": False, "filter": True, "gnuplot": False, "interval": True,
-    "index-config": True, "index-path": True, "path": True, "points": False,
-    "raw": False, "time-field": True, "time-format": True, "verbose": False,
-    "warnings": False,
-    # beyond-reference store subcommands (vindex-*, fp-*)
-    "out": True, "centroids": True, "k": True, "probe": True,
-    "queries": True, "id-field": True, "vec-field": True,
-    "text-field": True, "quantize": False, "hashes": True, "bands": True,
-    "bits": True, "vectors": True, "min-band-hits": True,
-    "stream-dir": True, "checkpoint": True, "no-recenter": False,
-    "target-rows-per-cell": True, "max-files": True,
-    # round-9: sink fold, profiler, LM store
-    "min-batches": True, "keep-last": True, "order-by": True,
-    "format": True, "docs": True, "min-count": True, "lam-pct": True,
-    "min-mean-logp": True, "gram-n": True, "m-bits": True, "k": True,
-    "max-hit-frac": True, "src-field": True, "attribute": False,
-    # round-9: semdedup + KMV distinct
-    "iterations": True, "threshold": True, "id-col": True,
-    "vec-col": True, "col": True, "group-by": True, "exact": False,
-    "data": True, "glob": True,
-    # round-10: semdedup auto-k (the paper's k ∝ n regime) + graph CLI
-    "target-rows": True, "op": True, "seeds": True, "id-a": True,
-    "id-b": True, "top": True, "ids": True,
-    # round-11: hierarchical (n·√k) SemDeDup assignment
-    "two-level": False,
-    # round-13: store-amortized pair discovery (band-pairs / srp-pairs)
-    "bounded": False, "slices": True, "mode": True,
-    # round-14: corpus-sized auto-width SRP builds from the CLI, and
-    # discovery-only bounded collision joins (the 10^5-tier posture)
-    "seed": True, "dims": True, "no-pair-keys": False,
-    "candidates-only": False,
-}
+#: declared default of an option that must be given
+REQUIRED = object()
+#: option type of a flag: present or absent, never given a value
+FLAG = bool
+
+
+def _filter(val: str):
+    try:
+        return json.loads(val)
+    except json.JSONDecodeError as e:
+        raise UsageError(f"invalid filter: {e.msg}")
+
+
+def _int_or_auto(val: str):
+    return val if val == "auto" else int(val)
+
+
+# what a value-checking option type accepts, for its usage error
+_EXPECTED = {int: "an integer", float: "a number",
+             _int_or_auto: 'an integer or "auto"'}
+
+
+class Verb(NamedTuple):
+    run: Callable
+    nargs: int
+    options: dict
+
+
+COMMANDS: dict[str, Verb] = {}
+
+
+def verb(name: str, nargs: int, options: dict | None = None):
+    """Declare the ``dn`` verb ``name``: it takes ``nargs`` positionals
+    and, per option name, a ``(type, default)`` pair (see the module
+    docstring). The decorated ``run(args, opts, cat, out)`` gets the
+    positionals and the typed options."""
+
+    def register(run):
+        COMMANDS[name] = Verb(run, nargs, options or {})
+        return run
+
+    return register
+
+
 _SHORTS = {
     "A": "after", "B": "before", "b": "breakdowns", "n": "dry-run",
     "f": "filter", "i": "interval", "v": "verbose",
 }
 
 
-def _parse_args(argv: list[str], allowed: list[str]) -> dict:
-    """Minimal dashdash-alike: --opt=v, --opt v, -x v, interspersed
-    positionals collect into ``_args``. Unknown options are usage
-    errors, like the reference's allowUnknown: false."""
-    opts: dict[str, Any] = {"_args": []}
+def _require(opts: dict, name: str) -> None:
+    if name.replace("-", "_") not in opts:
+        raise UsageError(f'"{name}" option is required')
+
+
+def _parse_args(argv: list[str], nargs: int, options: dict):
+    """Minimal dashdash-alike over one verb's declaration: --opt=v,
+    --opt v and -x v, with positionals interspersed. Returns
+    ``(positionals, opts)``; ``opts`` is keyed by option name with
+    dashes as underscores and holds every option that was given or
+    has a default. Unknown options, like the
+    reference's allowUnknown: false, and missing, badly typed or
+    wrongly valued options and a wrong positional count are
+    UsageErrors."""
+    args: list[str] = []
+    opts: dict[str, Any] = {}
     i = 0
     while i < len(argv):
         a = argv[i]
         name = None
         inline = None
         if a.startswith("--") and len(a) > 2:
-            body = a[2:]
-            if "=" in body:
-                name, inline = body.split("=", 1)
-            else:
-                name = body
+            name, eq, val = a[2:].partition("=")
+            if eq:
+                inline = val
         elif a.startswith("-") and len(a) > 1 and not a[1:].isdigit():
             short = a[1:]
             if short not in _SHORTS:
                 raise UsageError(f'unknown option: "-{short}"')
             name = _SHORTS[short]
         if name is None:
-            opts["_args"].append(a)
+            args.append(a)
             i += 1
             continue
-        if name not in allowed:
+        if name not in options:
             raise UsageError(f'unknown option: "--{name}"')
-        if _OPT_DEFS[name]:
-            if inline is not None:
-                val = inline
-            else:
-                if i + 1 >= len(argv):
-                    raise UsageError(f'option "--{name}" requires an argument')
-                i += 1
-                val = argv[i]
-            key = name.replace("-", "_")
-            if name == "breakdowns":
-                # comma-splitting is bracket-aware and happens in the
-                # field-spec parser (reference: dnExpandArray → attrsParse)
-                opts.setdefault("breakdowns", []).append(val)
-            else:
-                opts[key] = val
-        else:
+        typ = options[name][0]
+        key = name.replace("-", "_")
+        if typ is FLAG:
             if inline is not None:
                 # '--quantize=false' silently ENABLING quantization is
                 # the worst parse outcome; flags take no value at all
                 raise UsageError(
                     f'option "--{name}" is a flag and takes no value'
                 )
-            opts[name.replace("-", "_")] = True
+            opts[key] = True
+        else:
+            if inline is None:
+                if i + 1 >= len(argv):
+                    raise UsageError(f'option "--{name}" requires an argument')
+                i += 1
+                inline = argv[i]
+            if typ is list:
+                # repeatable; comma-splitting is bracket-aware and
+                # happens in the field-spec parser (reference:
+                # dnExpandArray → attrsParse)
+                opts.setdefault(key, []).append(inline)
+            else:
+                try:
+                    opts[key] = typ(inline)
+                except ValueError:
+                    raise UsageError(
+                        f'bad value for "{name}" ("{inline}"): '
+                        f"expected {_EXPECTED[typ]}"
+                    )
         i += 1
-    if "filter" in opts:
-        try:
-            opts["filter"] = json.loads(opts["filter"])
-        except json.JSONDecodeError as e:
-            raise UsageError(f"invalid filter: {e.msg}")
-    return opts
-
-
-def _nargs(opts: dict, n: int) -> list[str]:
-    args = opts["_args"]
-    if len(args) < n:
+    if len(args) < nargs:
         raise UsageError("missing arguments")
-    if len(args) > n:
-        raise UsageError('extra arguments: "%s"' % " ".join(args[n:]))
-    return args
+    if len(args) > nargs:
+        raise UsageError('extra arguments: "%s"' % " ".join(args[nargs:]))
+    for name, (_, default) in options.items():
+        if default is REQUIRED:
+            _require(opts, name)
+        elif default is not None:
+            opts.setdefault(name.replace("-", "_"), default)
+    return args, opts
 
 
 # ------------------------------------------------------------- config output
@@ -192,76 +218,58 @@ def _print_datasource(out, name: str, ds: DatasourceConfig, verbose: bool):
 
 # ------------------------------------------------------------ config commands
 
-def _ds_config_from_opts(name: str, opts: dict) -> DatasourceConfig:
-    return DatasourceConfig(
-        name=name,
-        path=opts["path"],
-        backend=opts.get("backend", "file"),
-        data_format=opts.get("data_format", "json"),
-        index_path=opts.get("index_path"),
-        time_format=opts.get("time_format"),
-        time_field=opts.get("time_field"),
-        filter=opts.get("filter"),
-    )
+# datasource-add's options; datasource-update takes the same ones with
+# no defaults, so only the options given replace the stored values
+_DS_OPTS = {
+    "backend": (str, "file"), "data-format": (str, "json"),
+    "filter": (_filter, None), "path": (str, REQUIRED),
+    "time-field": (str, None), "time-format": (str, None),
+    "index-path": (str, None),
+}
 
 
-def cmd_datasource_add(argv, cat: Catalog, out):
-    opts = _parse_args(argv, ["backend", "data-format", "filter", "path",
-                              "time-field", "time-format", "index-path"])
-    if "path" not in opts:
-        raise UsageError('"path" option is required')
-    (name,) = _nargs(opts, 1)
-    cat.datasource_add(_ds_config_from_opts(name, opts))
+@verb("datasource-add", 1, _DS_OPTS)
+def cmd_datasource_add(args, opts, cat: Catalog, out):
+    (name,) = args
+    cat.datasource_add(DatasourceConfig(name=name, **opts))
     cat.save()
 
 
-def cmd_datasource_update(argv, cat: Catalog, out):
-    opts = _parse_args(argv, ["backend", "data-format", "filter", "path",
-                              "time-field", "time-format", "index-path"])
-    (name,) = _nargs(opts, 1)
-    old = cat.datasource(name)
-    merged = DatasourceConfig(
-        name=name,
-        path=opts.get("path", old.path),
-        backend=opts.get("backend", old.backend),
-        data_format=opts.get("data_format", old.data_format),
-        index_path=opts.get("index_path", old.index_path),
-        time_format=opts.get("time_format", old.time_format),
-        time_field=opts.get("time_field", old.time_field),
-        filter=opts.get("filter", old.filter),
-    )
+@verb("datasource-update", 1, {o: (t, None) for o, (t, _) in _DS_OPTS.items()})
+def cmd_datasource_update(args, opts, cat: Catalog, out):
+    (name,) = args
+    merged = dataclasses.replace(cat.datasource(name), **opts)
     cat.datasource_add(merged, update=True)
     cat.save()
 
 
-def cmd_datasource_remove(argv, cat: Catalog, out):
-    opts = _parse_args(argv, [])
-    (name,) = _nargs(opts, 1)
+@verb("datasource-remove", 1)
+def cmd_datasource_remove(args, opts, cat: Catalog, out):
+    (name,) = args
     cat.datasource_remove(name)
     cat.save()
 
 
-def cmd_datasource_list(argv, cat: Catalog, out):
-    opts = _parse_args(argv, ["verbose"])
-    _nargs(opts, 0)
+@verb("datasource-list", 0, {"verbose": (FLAG, False)})
+def cmd_datasource_list(args, opts, cat: Catalog, out):
     out.write("%-20s %-59s\n" % ("DATASOURCE", "LOCATION"))
     for name in cat.datasources:
-        _print_datasource(out, name, cat.datasources[name], opts.get("verbose", False))
+        _print_datasource(out, name, cat.datasources[name], opts["verbose"])
 
 
-def cmd_datasource_show(argv, cat: Catalog, out):
-    opts = _parse_args(argv, ["verbose"])
-    (name,) = _nargs(opts, 1)
+@verb("datasource-show", 1, {"verbose": (FLAG, False)})
+def cmd_datasource_show(args, opts, cat: Catalog, out):
+    (name,) = args
     ds = cat.datasource(name)
     out.write("%-20s %-59s\n" % ("DATASOURCE", "LOCATION"))
-    _print_datasource(out, name, ds, opts.get("verbose", False))
+    _print_datasource(out, name, ds, opts["verbose"])
 
 
-def cmd_metric_add(argv, cat: Catalog, out):
+@verb("metric-add", 2, {"breakdowns": (list, None), "filter": (_filter, None)})
+def cmd_metric_add(args, opts, cat: Catalog, out):
     from dragnet_spark.fieldspec import parse_breakdowns
 
-    opts = _parse_args(argv, ["breakdowns", "filter"])
-    dsname, metname = _nargs(opts, 2)
+    dsname, metname = args
     parsed = parse_breakdowns(opts.get("breakdowns", []))
     cat.metric_add(
         MetricConfig(
@@ -274,20 +282,20 @@ def cmd_metric_add(argv, cat: Catalog, out):
     cat.save()
 
 
-def cmd_metric_remove(argv, cat: Catalog, out):
-    opts = _parse_args(argv, [])
-    dsname, metname = _nargs(opts, 2)
+@verb("metric-remove", 2)
+def cmd_metric_remove(args, opts, cat: Catalog, out):
+    dsname, metname = args
     cat.metric_remove(dsname, metname)
     cat.save()
 
 
-def cmd_metric_list(argv, cat: Catalog, out):
-    opts = _parse_args(argv, ["verbose"])
-    (dsname,) = _nargs(opts, 1)
+@verb("metric-list", 1, {"verbose": (FLAG, False)})
+def cmd_metric_list(args, opts, cat: Catalog, out):
+    (dsname,) = args
     out.write("%-20s %-20s\n" % ("DATASOURCE", "METRIC"))
     for m in cat.metrics_for(dsname):
         out.write("%-20s %-20s\n" % (m.datasource, m.name))
-        if not opts.get("verbose"):
+        if not opts["verbose"]:
             continue
         if m.filter is not None:
             out.write("    %-11s %s\n" % ("filter:", json.dumps(m.filter, separators=(",", ":"))))
@@ -408,25 +416,35 @@ def _print_counters(observations: dict, noutputs: int) -> None:
     line("Aggregator", "noutputs", noutputs)
 
 
-def cmd_scan(argv, cat: Catalog, out):
+# the query options of scan, query and index-scan
+_QUERY_OPTS = {
+    "before": (str, None), "after": (str, None), "filter": (_filter, None),
+    "breakdowns": (list, None), "counters": (FLAG, False),
+}
+# scan and query render through output.format
+_RENDER_OPTS = {
+    "raw": (FLAG, False), "points": (FLAG, False), "gnuplot": (FLAG, False),
+    "assetroot": (str, None), "dry-run": (FLAG, False),
+}
+
+
+@verb("scan", 1, {**_QUERY_OPTS, **_RENDER_OPTS, "warnings": (FLAG, False)})
+def cmd_scan(args, opts, cat: Catalog, out):
     from dragnet_spark.datasource import list_files, load_datasource, resolve_paths
     from dragnet_spark.scan import scan
 
-    opts = _parse_args(argv, ["before", "after", "filter", "breakdowns", "raw",
-                              "points", "counters", "warnings", "gnuplot",
-                              "assetroot", "dry-run"])
-    (dsname,) = _nargs(opts, 1)
+    (dsname,) = args
     ds = cat.datasource(dsname)
     query = _query_from_opts(opts, ds)
 
-    if opts.get("dry_run"):
+    if opts["dry_run"]:
         out.write("would scan files:\n")
         for f in list_files(resolve_paths(ds, query)):
             out.write("    %s\n" % f)
         return
 
     spark = _get_spark()
-    observations = {} if opts.get("counters") else None
+    observations = {} if opts["counters"] else None
     df, resolver, value_col = load_datasource(
         spark, ds, query, observations=observations
     )
@@ -440,7 +458,7 @@ def cmd_scan(argv, cat: Catalog, out):
     _render_result(rows, query, opts, out, dsname)
     if observations:
         _print_counters(observations, len(rows))
-    if opts.get("warnings"):
+    if opts["warnings"]:
         from dragnet_spark.sources.ndjson import corrupt_line_count
 
         if ds.data_format == "json":
@@ -449,24 +467,27 @@ def cmd_scan(argv, cat: Catalog, out):
                 sys.stderr.write("warn: %d unparseable input lines\n" % n)
 
 
-def cmd_build(argv, cat: Catalog, out):
+@verb("build", 1, {
+    "after": (str, None), "before": (str, None), "counters": (FLAG, False),
+    "dry-run": (FLAG, False), "index-config": (str, None),
+    "interval": (str, "day"), "warnings": (FLAG, False),
+    "assetroot": (str, None),
+})
+def cmd_build(args, opts, cat: Catalog, out):
     from dragnet_spark.datasource import load_datasource
     from dragnet_spark.index.build import build_index
 
-    opts = _parse_args(argv, ["after", "before", "counters", "dry-run",
-                              "index-config", "interval", "warnings",
-                              "assetroot"])
-    (dsname,) = _nargs(opts, 1)
+    (dsname,) = args
     ds = cat.datasource(dsname)
     if not ds.index_path:
         raise FatalError(f'datasource "{dsname}" has no index path configured')
     metrics = _metrics_for_build(cat, dsname, opts)
     if not metrics:
         raise FatalError(f'datasource "{dsname}" has no metrics configured')
-    interval = opts.get("interval", "day")
+    interval = opts["interval"]
     query = _query_from_opts(opts, ds)
 
-    if opts.get("dry_run"):
+    if opts["dry_run"]:
         out.write('would build %s index for "%s" (%d metrics)\n'
                   % (interval, dsname, len(metrics)))
         return
@@ -484,20 +505,18 @@ def cmd_build(argv, cat: Catalog, out):
     sys.stderr.write('indexes for "%s" built\n' % dsname)
 
 
-def cmd_query(argv, cat: Catalog, out):
+@verb("query", 1, {**_QUERY_OPTS, **_RENDER_OPTS, "interval": (str, "day")})
+def cmd_query(args, opts, cat: Catalog, out):
     from dragnet_spark.index.query import NoMetricError, query_index
 
-    opts = _parse_args(argv, ["before", "after", "filter", "breakdowns", "raw",
-                              "points", "counters", "interval", "gnuplot",
-                              "assetroot", "dry-run"])
-    (dsname,) = _nargs(opts, 1)
+    (dsname,) = args
     ds = cat.datasource(dsname)
     if not ds.index_path:
         raise FatalError(f'datasource "{dsname}" has no index path configured')
     query = _query_from_opts(opts, ds)
     import os
 
-    interval = opts.get("interval", "day")
+    interval = opts["interval"]
     idx = _index_root(ds, interval)
     if not os.path.exists(idx):
         raise FatalError(
@@ -515,9 +534,9 @@ def cmd_query(argv, cat: Catalog, out):
     _render_result(res, query, opts, out, dsname)
 
 
-def cmd_index_config(argv, cat: Catalog, out):
-    opts = _parse_args(argv, [])
-    (dsname,) = _nargs(opts, 1)
+@verb("index-config", 1)
+def cmd_index_config(args, opts, cat: Catalog, out):
+    (dsname,) = args
     cat.datasource(dsname)
     metrics = [
         {"name": m.name, "filter": m.filter,
@@ -527,7 +546,10 @@ def cmd_index_config(argv, cat: Catalog, out):
     out.write(json.dumps({"metrics": metrics}, separators=(",", ":")) + "\n")
 
 
-def cmd_index_scan(argv, cat: Catalog, out):
+@verb("index-scan", 1, {
+    **_QUERY_OPTS, "index-config": (str, None), "interval": (str, "day"),
+})
+def cmd_index_scan(args, opts, cat: Catalog, out):
     """Map phase of a distributed build: emit each metric's aggregated
     points, tagged with __dn_metric, ready to pipe into index-read."""
     from dragnet_spark.datasource import load_datasource
@@ -537,14 +559,12 @@ def cmd_index_scan(argv, cat: Catalog, out):
     from dragnet_spark.fieldspec import Breakdown
     from pyspark.sql import functions as F
 
-    opts = _parse_args(argv, ["before", "after", "filter", "breakdowns",
-                              "counters", "index-config", "interval"])
-    (dsname,) = _nargs(opts, 1)
+    (dsname,) = args
     ds = cat.datasource(dsname)
     metrics = _metrics_for_build(cat, dsname, opts)
     if not metrics:
         raise FatalError(f'datasource "{dsname}" has no metrics configured')
-    interval = opts.get("interval", "day")
+    interval = opts["interval"]
     query = _query_from_opts(opts, ds)
     spark = _get_spark()
     df, resolver, _vc = load_datasource(spark, ds, query)
@@ -598,20 +618,20 @@ def cmd_index_scan(argv, cat: Catalog, out):
             agg.unpersist()
 
 
-def cmd_index_read(argv, cat: Catalog, out):
+@verb("index-read", 1, {"index-config": (str, None), "interval": (str, "day")})
+def cmd_index_read(args, opts, cat: Catalog, out):
     """Reduce phase of a distributed build: read tagged points from
     stdin and materialize the index views."""
     from dragnet_spark.index.build import BUCKET_COL, INDEX_META_FILE, INDEX_VERSION
     from dragnet_spark.index.store import write_meta
     import os
 
-    opts = _parse_args(argv, ["index-config", "interval"])
-    (dsname,) = _nargs(opts, 1)
+    (dsname,) = args
     ds = cat.datasource(dsname)
     if not ds.index_path:
         raise FatalError(f'datasource "{dsname}" has no index path configured')
     metrics = _metrics_for_build(cat, dsname, opts)
-    interval = opts.get("interval", "day")
+    interval = opts["interval"]
     spark = _get_spark()
 
     by_metric: dict[int, list[dict]] = {}
@@ -648,7 +668,8 @@ def cmd_index_read(argv, cat: Catalog, out):
     write_meta(root, INDEX_META_FILE, meta)
 
 
-def cmd_compact(argv, cat: Catalog, out):
+@verb("compact", 1, {"interval": (str, "day"), "dry-run": (FLAG, False)})
+def cmd_compact(args, opts, cat: Catalog, out):
     """dn compact <datasource> [--interval=day]: re-aggregate a view
     tree that accumulated appended partials (continuous builds) down to
     one row per group — answers unchanged, file count bounded. Stop
@@ -658,23 +679,27 @@ def cmd_compact(argv, cat: Catalog, out):
 
     from dragnet_spark.index.build import compact_index
 
-    opts = _parse_args(argv, ["interval", "dry-run"])
-    (dsname,) = _nargs(opts, 1)
+    (dsname,) = args
     ds = cat.datasource(dsname)
     if not ds.index_path:
         raise FatalError(f'datasource "{dsname}" has no index path configured')
-    interval = opts.get("interval", "day")
+    interval = opts["interval"]
     root = _index_root(ds, interval)
     if not os.path.isdir(root):
         raise FatalError(f"no {interval} index at {root}")
-    if opts.get("dry_run"):
+    if opts["dry_run"]:
         out.write('would compact %s index for "%s"\n' % (interval, dsname))
         return
     compact_index(_get_spark(), root)
     out.write('compacted %s index for "%s"\n' % (interval, dsname))
 
 
-def cmd_vindex_build(argv, cat: Catalog, out):
+@verb("vindex-build", 1, {
+    "out": (str, REQUIRED), "centroids": (int, 16), "quantize": (FLAG, False),
+    "id-field": (str, "vec_id"), "vec-field": (str, "embedding"),
+    "target-rows-per-cell": (int, None),
+})
+def cmd_vindex_build(args, opts, cat: Catalog, out):
     """dn vindex-build <embeddings.parquet> --out=PATH
     [--centroids=16] [--quantize] [--id-field=vec_id]
     [--vec-field=embedding] [--target-rows-per-cell=N]: materialize
@@ -686,28 +711,17 @@ def cmd_vindex_build(argv, cat: Catalog, out):
     (auto_cell_count) so continuous ingest keeps probe cost flat."""
     from dragnet_spark.index.vector import build_vector_index
 
-    opts = _parse_args(
-        argv,
-        ["out", "centroids", "quantize", "id-field", "vec-field",
-         "target-rows-per-cell"],
-    )
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
+    (src,) = args
     spark = _get_spark()
     meta = build_vector_index(
         spark,
         spark.read.parquet(src),
         opts["out"],
-        id_col=opts.get("id_field", "vec_id"),
-        vec_col=opts.get("vec_field", "embedding"),
-        n_centroids=int(opts.get("centroids", "16")),
-        quantize=bool(opts.get("quantize")),
-        target_rows_per_cell=(
-            int(opts["target_rows_per_cell"])
-            if "target_rows_per_cell" in opts
-            else None
-        ),
+        id_col=opts["id_field"],
+        vec_col=opts["vec_field"],
+        n_centroids=opts["centroids"],
+        quantize=opts["quantize"],
+        target_rows_per_cell=opts.get("target_rows_per_cell"),
     )
     out.write(
         "built vector index: %d cells, %d dims%s at %s\n"
@@ -720,7 +734,8 @@ def cmd_vindex_build(argv, cat: Catalog, out):
     )
 
 
-def cmd_vindex_append(argv, cat: Catalog, out):
+@verb("vindex-append", 1, {"out": (str, REQUIRED)})
+def cmd_vindex_append(args, opts, cat: Catalog, out):
     """dn vindex-append <embeddings.parquet> --out=PATH: append a
     batch into an existing vector index against its PERSISTED
     centroids (index/vector.append_vector_index) — continuous ingest
@@ -728,83 +743,81 @@ def cmd_vindex_append(argv, cat: Catalog, out):
     trigger."""
     from dragnet_spark.index.vector import append_vector_index
 
-    opts = _parse_args(argv, ["out"])
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
+    (src,) = args
     spark = _get_spark()
     append_vector_index(spark, spark.read.parquet(src), opts["out"])
     out.write("appended into vector index at %s\n" % opts["out"])
 
 
-def cmd_vindex_query(argv, cat: Catalog, out):
+@verb("vindex-query", 1, {
+    "queries": (str, REQUIRED), "k": (int, 5), "probe": (int, 4),
+    "id-field": (str, "vec_id"), "vec-field": (str, "embedding"),
+})
+def cmd_vindex_query(args, opts, cat: Catalog, out):
     """dn vindex-query <index-path> --queries=<parquet> [--k=5]
     [--probe=4] [--id-field=vec_id] [--vec-field=embedding]: top-k
     neighbors from the materialized index as NDJSON lines (the
     points-emitter convention)."""
     from dragnet_spark.index.vector import query_vector_index
 
-    opts = _parse_args(
-        argv, ["queries", "k", "probe", "id-field", "vec-field"]
-    )
-    (idx,) = _nargs(opts, 1)
-    if "queries" not in opts:
-        raise UsageError('"queries" option is required')
+    (idx,) = args
     spark = _get_spark()
     res = query_vector_index(
         spark,
         idx,
         spark.read.parquet(opts["queries"]),
-        k=int(opts.get("k", "5")),
-        n_probe=int(opts.get("probe", "4")),
-        id_col=opts.get("id_field", "vec_id"),
-        vec_col=opts.get("vec_field", "embedding"),
+        k=opts["k"],
+        n_probe=opts["probe"],
+        id_col=opts["id_field"],
+        vec_col=opts["vec_field"],
     )
     # presentation-layer collect: the final top-k result only
     for line in res.orderBy("query_id", "rank").toJSON().collect():
         out.write(line + "\n")
 
 
-def cmd_fp_build(argv, cat: Catalog, out):
+@verb("fp-build", 1, {
+    "out": (str, REQUIRED), "id-field": (str, "doc_id"),
+    "text-field": (str, "text"),
+})
+def cmd_fp_build(args, opts, cat: Catalog, out):
     """dn fp-build <docs.parquet> --out=PATH [--id-field=doc_id]
     [--text-field=text]: materialize the fingerprint store
     (beyond-reference; index/fingerprints.py) for incremental-ingest
     dedup."""
     from dragnet_spark.index.fingerprints import build_fingerprint_store
 
-    opts = _parse_args(argv, ["out", "id-field", "text-field"])
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
+    (src,) = args
     spark = _get_spark()
     build_fingerprint_store(
         spark,
         spark.read.parquet(src),
         opts["out"],
-        text_col=opts.get("text_field", "text"),
-        id_col=opts.get("id_field", "doc_id"),
+        text_col=opts["text_field"],
+        id_col=opts["id_field"],
     )
     out.write("built fingerprint store at %s\n" % opts["out"])
 
 
-def cmd_fp_probe(argv, cat: Catalog, out):
+@verb("fp-probe", 1, {
+    "queries": (str, REQUIRED), "id-field": (str, "doc_id"),
+    "text-field": (str, "text"),
+})
+def cmd_fp_probe(args, opts, cat: Catalog, out):
     """dn fp-probe <store-path> --queries=<parquet>
     [--id-field=doc_id] [--text-field=text]: probe an arriving batch
     against the store; prints per-doc NDJSON (doc_id, dup_of,
     is_duplicate) and a summary line."""
     from dragnet_spark.index.fingerprints import probe_new_documents
 
-    opts = _parse_args(argv, ["queries", "id-field", "text-field"])
-    (store,) = _nargs(opts, 1)
-    if "queries" not in opts:
-        raise UsageError('"queries" option is required')
+    (store,) = args
     spark = _get_spark()
     res = probe_new_documents(
         spark,
         store,
         spark.read.parquet(opts["queries"]),
-        text_col=opts.get("text_field", "text"),
-        id_col=opts.get("id_field", "doc_id"),
+        text_col=opts["text_field"],
+        id_col=opts["id_field"],
     ).orderBy("doc_id")
     rows = res.collect()  # presentation-layer: final result only
     for r in rows:
@@ -822,40 +835,27 @@ def cmd_fp_probe(argv, cat: Catalog, out):
     out.write("%d of %d already ingested\n" % (n_dup, len(rows)))
 
 
-def cmd_fp_compact(argv, cat: Catalog, out):
-    """dn fp-compact <store-path>: compact the fingerprint store —
-    collapse each fingerprint to its minimum doc_id, one file per
-    bucket (answer-preserving; pause appenders first)."""
-    from dragnet_spark.index.fingerprints import compact_fingerprint_store
-
-    opts = _parse_args(argv, [])
-    (store,) = _nargs(opts, 1)
-    compact_fingerprint_store(_get_spark(), store)
-    out.write("compacted fingerprint store at %s\n" % store)
-
-
-def cmd_band_build(argv, cat: Catalog, out):
+@verb("band-build", 1, {
+    "out": (str, REQUIRED), "hashes": (int, 16), "bands": (int, 8),
+    "id-field": (str, "doc_id"), "text-field": (str, "text"),
+})
+def cmd_band_build(args, opts, cat: Catalog, out):
     """dn band-build <docs.parquet> --out=PATH [--hashes=16]
     [--bands=8] [--id-field=doc_id] [--text-field=text]: materialize
     the minhash band store (in-stream near-dedup;
     index/fingerprints.build_band_store)."""
     from dragnet_spark.index.fingerprints import build_band_store
 
-    opts = _parse_args(
-        argv, ["out", "hashes", "bands", "id-field", "text-field"]
-    )
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
+    (src,) = args
     spark = _get_spark()
     meta = build_band_store(
         spark,
         spark.read.parquet(src),
         opts["out"],
-        text_col=opts.get("text_field", "text"),
-        id_col=opts.get("id_field", "doc_id"),
-        num_hashes=int(opts.get("hashes", "16")),
-        bands=int(opts.get("bands", "8")),
+        text_col=opts["text_field"],
+        id_col=opts["id_field"],
+        num_hashes=opts["hashes"],
+        bands=opts["bands"],
     )
     out.write(
         "built band store: %d hashes x %d bands at %s\n"
@@ -863,17 +863,15 @@ def cmd_band_build(argv, cat: Catalog, out):
     )
 
 
-def cmd_band_probe(argv, cat: Catalog, out):
+@verb("band-probe", 1, {"queries": (str, REQUIRED)})
+def cmd_band_probe(args, opts, cat: Catalog, out):
     """dn band-probe <store-path> --queries=<parquet>: probe an
     arriving batch for NEAR-duplicates of the stored corpus; prints
     per-doc NDJSON (doc_id, n_band_hits, dup_of, is_near_duplicate)
     and a summary line."""
     from dragnet_spark.index.fingerprints import probe_near_duplicates
 
-    opts = _parse_args(argv, ["queries"])
-    (store,) = _nargs(opts, 1)
-    if "queries" not in opts:
-        raise UsageError('"queries" option is required')
+    (store,) = args
     spark = _get_spark()
     res = probe_near_duplicates(
         spark, store, spark.read.parquet(opts["queries"])
@@ -895,7 +893,8 @@ def cmd_band_probe(argv, cat: Catalog, out):
     out.write("%d of %d near-duplicate the corpus\n" % (n_near, len(rows)))
 
 
-def cmd_band_append(argv, cat: Catalog, out):
+@verb("band-append", 1, {"docs": (str, REQUIRED)})
+def cmd_band_append(args, opts, cat: Catalog, out):
     """dn band-append <store-path> --docs=<parquet>: append a new
     batch's band keys with the store's PERSISTED banding params —
     the ingest-loop step that pays the signature stage exactly once
@@ -903,27 +902,18 @@ def cmd_band_append(argv, cat: Catalog, out):
     (the srp-append twin for token-level near-dup)."""
     from dragnet_spark.index.fingerprints import append_band_keys
 
-    opts = _parse_args(argv, ["docs"])
-    (store,) = _nargs(opts, 1)
-    if "docs" not in opts:
-        raise UsageError('"docs" option is required')
+    (store,) = args
     spark = _get_spark()
     append_band_keys(spark, spark.read.parquet(opts["docs"]), store)
     out.write("appended band keys into %s\n" % store)
 
 
-def cmd_band_compact(argv, cat: Catalog, out):
-    """dn band-compact <store-path>: compact the band store to
-    distinct (band, bhash, doc_id) rows, one file per band."""
-    from dragnet_spark.index.fingerprints import compact_band_store
-
-    opts = _parse_args(argv, [])
-    (store,) = _nargs(opts, 1)
-    compact_band_store(_get_spark(), store)
-    out.write("compacted band store at %s\n" % store)
-
-
-def cmd_srp_build(argv, cat: Catalog, out):
+@verb("srp-build", 1, {
+    "out": (str, REQUIRED), "bands": (int, 8), "bits": (_int_or_auto, 16),
+    "seed": (int, 42), "dims": (int, None), "no-pair-keys": (FLAG, False),
+    "id-field": (str, "vec_id"), "vec-field": (str, "embedding"),
+})
+def cmd_srp_build(args, opts, cat: Catalog, out):
     """dn srp-build <embeddings.parquet> --out=PATH [--bands=8]
     [--bits=16|auto] [--seed=42] [--dims=N] [--no-pair-keys]
     [--id-field=vec_id] [--vec-field=embedding]:
@@ -937,24 +927,14 @@ def cmd_srp_build(argv, cat: Catalog, out):
     key dir (pair discovery via srp-pairs does not need it)."""
     from dragnet_spark.index.fingerprints import build_srp_store
 
-    opts = _parse_args(
-        argv,
-        [
-            "out", "bands", "bits", "seed", "dims",
-            "no-pair-keys", "id-field", "vec-field",
-        ],
-    )
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
+    (src,) = args
     spark = _get_spark()
     df = spark.read.parquet(src)
-    bands = int(opts.get("bands", "8"))
-    seed = int(opts.get("seed", "42"))
-    vec_col = opts.get("vec_field", "embedding")
-    dims = int(opts["dims"]) if "dims" in opts else None
+    bands, seed, bits = opts["bands"], opts["seed"], opts["bits"]
+    vec_col = opts["vec_field"]
+    dims = opts.get("dims")
     kwargs = {}
-    if opts.get("bits", "16") == "auto":
+    if bits == "auto":
         from pyspark.sql import functions as F
 
         from dragnet_spark.ops.dedup import auto_srp_width
@@ -973,19 +953,17 @@ def cmd_srp_build(argv, cat: Catalog, out):
             dims = int(first["d"])
         n = df.count()
         bits, kwargs["planes_q"] = auto_srp_width(n, bands, dims, seed)
-    else:
-        bits = int(opts.get("bits", "16"))
     meta = build_srp_store(
         spark,
         df,
         opts["out"],
         vec_col=vec_col,
-        id_col=opts.get("id_field", "vec_id"),
+        id_col=opts["id_field"],
         bands=bands,
         bits_per_band=bits,
         seed=seed,
         dims=dims,
-        with_pairs="no_pair_keys" not in opts,
+        with_pairs=not opts["no_pair_keys"],
         **kwargs,
     )
     out.write(
@@ -994,21 +972,20 @@ def cmd_srp_build(argv, cat: Catalog, out):
     )
 
 
-def cmd_srp_append(argv, cat: Catalog, out):
+@verb("srp-append", 1, {"vectors": (str, REQUIRED)})
+def cmd_srp_append(args, opts, cat: Catalog, out):
     """dn srp-append <store-path> --vectors=<parquet>: append a new
     batch's band keys with the store's PERSISTED planes."""
     from dragnet_spark.index.fingerprints import append_srp_keys
 
-    opts = _parse_args(argv, ["vectors"])
-    (store,) = _nargs(opts, 1)
-    if "vectors" not in opts:
-        raise UsageError('"vectors" option is required')
+    (store,) = args
     spark = _get_spark()
     append_srp_keys(spark, spark.read.parquet(opts["vectors"]), store)
     out.write("appended SRP band keys into %s\n" % store)
 
 
-def cmd_srp_probe(argv, cat: Catalog, out):
+@verb("srp-probe", 1, {"queries": (str, REQUIRED), "min-band-hits": (int, 1)})
+def cmd_srp_probe(args, opts, cat: Catalog, out):
     """dn srp-probe <store-path> --queries=<parquet>
     [--min-band-hits=1]: probe an arriving embedding batch for
     SEMANTIC near-duplicates of the stored corpus; prints per-vector
@@ -1016,16 +993,13 @@ def cmd_srp_probe(argv, cat: Catalog, out):
     summary line."""
     from dragnet_spark.index.fingerprints import probe_srp_near_duplicates
 
-    opts = _parse_args(argv, ["queries", "min-band-hits"])
-    (store,) = _nargs(opts, 1)
-    if "queries" not in opts:
-        raise UsageError('"queries" option is required')
+    (store,) = args
     spark = _get_spark()
     res = probe_srp_near_duplicates(
         spark,
         store,
         spark.read.parquet(opts["queries"]),
-        min_band_hits=int(opts.get("min_band_hits", "1")),
+        min_band_hits=opts["min_band_hits"],
     ).orderBy("vec_id")
     rows = res.collect()  # presentation-layer: final result only
     for r in rows:
@@ -1066,7 +1040,7 @@ def _run_candidates_only(fn, store: str, opts: dict, out) -> None:
     sink's row count); OUT also holds the resume manifest."""
     if "out" not in opts:
         raise UsageError('"--candidates-only" requires "--out"')
-    slices = int(opts.get("slices", "8"))
+    slices = opts["slices"]
     spark = _get_spark()
     n = fn(spark, store, opts["out"], slices=slices).count()
     out.write(
@@ -1076,7 +1050,12 @@ def _run_candidates_only(fn, store: str, opts: dict, out) -> None:
     )
 
 
-def cmd_band_pairs(argv, cat: Catalog, out):
+@verb("band-pairs", 1, {
+    "docs": (str, None), "threshold": (float, 0.8), "out": (str, None),
+    "bounded": (FLAG, False), "slices": (int, 8),
+    "candidates-only": (FLAG, False),
+})
+def cmd_band_pairs(args, opts, cat: Catalog, out):
     """dn band-pairs <store-path> --docs=<parquet> [--threshold=0.8]
     [--out=DIR] [--bounded [--slices=8]]: near-duplicate PAIR
     DISCOVERY from the persisted minhash band store — the
@@ -1105,24 +1084,18 @@ def cmd_band_pairs(argv, cat: Catalog, out):
         band_store_pairs_bounded,
     )
 
-    opts = _parse_args(
-        argv,
-        ["docs", "threshold", "out", "bounded", "slices",
-         "candidates-only"],
-    )
-    (store,) = _nargs(opts, 1)
-    if opts.get("candidates_only"):
+    (store,) = args
+    if opts["candidates_only"]:
         _run_candidates_only(band_store_candidates_bounded, store, opts, out)
         return
-    if "docs" not in opts:
-        raise UsageError('"docs" option is required')
-    thr = float(opts.get("threshold", "0.8"))
+    _require(opts, "docs")
+    thr = opts["threshold"]
     spark = _get_spark()
     docs = spark.read.parquet(opts["docs"])
-    if opts.get("bounded"):
+    if opts["bounded"]:
         if "out" not in opts:
             raise UsageError('"--bounded" requires "--out"')
-        slices = int(opts.get("slices", "8"))
+        slices = opts["slices"]
         pairs = band_store_pairs_bounded(
             spark, store, docs, opts["out"], threshold=thr, slices=slices
         )
@@ -1148,7 +1121,12 @@ def cmd_band_pairs(argv, cat: Catalog, out):
     )
 
 
-def cmd_srp_pairs(argv, cat: Catalog, out):
+@verb("srp-pairs", 1, {
+    "vectors": (str, None), "threshold": (float, 0.9), "out": (str, None),
+    "mode": (str, "oneshot"), "slices": (int, 8),
+    "candidates-only": (FLAG, False),
+})
+def cmd_srp_pairs(args, opts, cat: Catalog, out):
     """dn srp-pairs <store-path> --vectors=<parquet> [--threshold=0.9]
     [--out=DIR] [--mode=oneshot|sliced|bucket [--slices=8]]: SEMANTIC
     near-duplicate PAIR DISCOVERY from the persisted SRP band store —
@@ -1172,30 +1150,24 @@ def cmd_srp_pairs(argv, cat: Catalog, out):
         srp_store_pairs_bucket_verify,
     )
 
-    opts = _parse_args(
-        argv,
-        ["vectors", "threshold", "out", "mode", "slices",
-         "candidates-only"],
-    )
-    (store,) = _nargs(opts, 1)
-    if opts.get("candidates_only"):
+    (store,) = args
+    if opts["candidates_only"]:
         _run_candidates_only(srp_store_candidates_bounded, store, opts, out)
         return
-    if "vectors" not in opts:
-        raise UsageError('"vectors" option is required')
-    mode = opts.get("mode", "oneshot")
+    _require(opts, "vectors")
+    mode = opts["mode"]
     if mode not in ("oneshot", "sliced", "bucket"):
         raise UsageError(
             f'unknown mode: "{mode}" (expected oneshot, sliced, or bucket)'
         )
-    thr = float(opts.get("threshold", "0.9"))
+    thr = opts["threshold"]
     spark = _get_spark()
     vecs = spark.read.parquet(opts["vectors"])
     if mode != "oneshot":
         if "out" not in opts:
             raise UsageError(f'mode "{mode}" requires "--out"')
         if mode == "sliced":
-            slices = int(opts.get("slices", "8"))
+            slices = opts["slices"]
             pairs = srp_store_pairs_bounded(
                 spark, store, vecs, opts["out"], threshold=thr, slices=slices
             )
@@ -1228,80 +1200,67 @@ def cmd_srp_pairs(argv, cat: Catalog, out):
     )
 
 
-def cmd_srp_compact(argv, cat: Catalog, out):
-    """dn srp-compact <store-path>: compact the SRP store (band and
-    band-pair keys) to distinct rows, one file per slice."""
-    from dragnet_spark.index.fingerprints import compact_srp_store
+def cmd_store_compact(kind: str, what: str, args, opts, cat: Catalog, out):
+    """dn fp-compact|band-compact|srp-compact|vindex-compact <path>:
+    compact one store with the function dn maintain runs for its kind
+    (index/maintain._COMPACT) — answer-preserving and lease-serialized
+    against appenders. fp collapses each fingerprint to its minimum
+    doc_id, one file per bucket; band and SRP keep distinct key rows
+    (SRP: band and band-pair keys), one file per band or slice; the
+    vector index rewrites each cell to one file, assignments and
+    centroids untouched."""
+    from dragnet_spark.index.maintain import _COMPACT
 
-    opts = _parse_args(argv, [])
-    (store,) = _nargs(opts, 1)
-    compact_srp_store(_get_spark(), store)
-    out.write("compacted SRP store at %s\n" % store)
-
-
-def cmd_vindex_compact(argv, cat: Catalog, out):
-    """dn vindex-compact <index-path>: rewrite each cell to one file
-    after appends (assignments/centroids untouched)."""
-    from dragnet_spark.index.vector import compact_vector_index
-
-    opts = _parse_args(argv, [])
-    (idx,) = _nargs(opts, 1)
-    compact_vector_index(_get_spark(), idx)
-    out.write("compacted vector index at %s\n" % idx)
+    (path,) = args
+    _COMPACT[kind](_get_spark(), path)
+    out.write("compacted %s at %s\n" % (what, path))
 
 
-def cmd_vindex_stats(argv, cat: Catalog, out):
+for _kind, _what in (
+    ("fp", "fingerprint store"), ("band", "band store"),
+    ("srp", "SRP store"), ("vindex", "vector index"),
+):
+    verb(f"{_kind}-compact", 1)(
+        functools.partial(cmd_store_compact, _kind, _what)
+    )
+
+
+@verb("vindex-stats", 1)
+def cmd_vindex_stats(args, opts, cat: Catalog, out):
     """dn vindex-stats <index-path>: cell-population stats and the
     recenter recommendation — the operational readout behind the
     documented ~4x max/mean skew trigger."""
-    from dragnet_spark.index.vector import (
-        load_vector_index_meta,
-        vector_index_cell_stats,
-    )
+    from dragnet_spark.index.vector import vector_index_health
 
-    opts = _parse_args(argv, [])
-    (idx,) = _nargs(opts, 1)
-    spark = _get_spark()
-    meta = load_vector_index_meta(idx)
-    rows = sorted(
-        (r["cell"], r["n_vectors"])
-        for r in vector_index_cell_stats(spark, idx).collect()
-    )
-    counts = [n for _, n in rows]
-    total = sum(counts)
-    mean = total / max(len(counts), 1)
-    skew = (max(counts) / mean) if counts and mean else 0.0
+    (idx,) = args
+    h = vector_index_health(_get_spark(), idx)
+    meta = h["meta"]
     out.write(
         "%d vectors in %d/%d cells%s; max/mean skew %.2f\n"
         % (
-            total,
-            len(counts),
+            h["rows"],
+            len(h["cells"]),
             meta["n_centroids"],
             " (int8)" if meta.get("quantized") else "",
-            skew,
+            h["skew"],
         )
     )
-    for cell, n in rows:
+    for cell, n in h["cells"]:
         out.write("    cell=%-4d %d\n" % (cell, n))
-    target = meta.get("target_rows_per_cell")
-    outgrown = (
-        target is not None
-        and total / max(meta["n_centroids"], 1) >= 2 * target
-    )
-    if skew > 4.0 or len(counts) < meta["n_centroids"] or outgrown:
-        why = (
-            "mean rows/cell past 2x the target-rows-per-cell policy"
-            if outgrown
-            else "skew or empty cells past the trigger"
-        )
+    if h["recenter"]:
         out.write(
-            "recommendation: recenter (dn vindex-recenter) — %s\n" % why
+            "recommendation: recenter (dn vindex-recenter) — %s\n"
+            % h["recenter"]
         )
     else:
         out.write("recommendation: healthy; no recenter needed\n")
 
 
-def cmd_vindex_ingest(argv, cat: Catalog, out):
+@verb("vindex-ingest", 1, {
+    "stream-dir": (str, REQUIRED), "checkpoint": (str, REQUIRED),
+    "no-recenter": (FLAG, False),
+})
+def cmd_vindex_ingest(args, opts, cat: Catalog, out):
     """dn vindex-ingest <index-path> --stream-dir=DIR
     --checkpoint=CKPT [--no-recenter]: drain all pending parquet
     files from DIR into the index via the streaming ingest loop
@@ -1312,17 +1271,13 @@ def cmd_vindex_ingest(argv, cat: Catalog, out):
     drain-and-exit job."""
     from dragnet_spark.index.vector import (
         load_vector_index_meta,
-        vector_index_skew,
+        vector_index_health,
     )
     from dragnet_spark.streaming.pipeline import (
         stream_ingest_vector_index,
     )
 
-    opts = _parse_args(argv, ["stream-dir", "checkpoint", "no-recenter"])
-    (idx,) = _nargs(opts, 1)
-    for req in ("stream_dir", "checkpoint"):
-        if req not in opts:
-            raise UsageError(f'"{req.replace("_", "-")}" option is required')
+    (idx,) = args
     spark = _get_spark()
     meta = load_vector_index_meta(idx)
     # stream schema comes from the types persisted at build time (a
@@ -1340,35 +1295,33 @@ def cmd_vindex_ingest(argv, cat: Catalog, out):
         sdf,
         idx,
         opts["checkpoint"],
-        recenter_trigger=None if "no_recenter" in opts else 4.0,
+        recenter_trigger=None if opts["no_recenter"] else 4.0,
         trigger_available_now=True,
     )
     q.awaitTermination()
-    skew = vector_index_skew(spark, idx)
+    h = vector_index_health(spark, idx)
     out.write(
         "drained pending batches into %s; cell skew %.2f%s\n"
         % (
             idx,
-            skew,
+            h["skew"],
             " (over the recenter trigger — next run recenters)"
-            if skew >= 4.0
+            if h["recenter"]
             else "",
         )
     )
 
 
-def cmd_vindex_recenter(argv, cat: Catalog, out):
+@verb("vindex-recenter", 1, {"centroids": (int, None)})
+def cmd_vindex_recenter(args, opts, cat: Catalog, out):
     """dn vindex-recenter <index-path> [--centroids=N]: retrain
     centroids on the current store contents and rebuild in place —
     the recenter action for a drift-skewed index."""
     from dragnet_spark.index.vector import recenter_vector_index
 
-    opts = _parse_args(argv, ["centroids"])
-    (idx,) = _nargs(opts, 1)
+    (idx,) = args
     meta = recenter_vector_index(
-        _get_spark(),
-        idx,
-        n_centroids=int(opts["centroids"]) if "centroids" in opts else None,
+        _get_spark(), idx, n_centroids=opts.get("centroids")
     )
     out.write(
         "recentered vector index: %d cells at %s\n"
@@ -1376,7 +1329,10 @@ def cmd_vindex_recenter(argv, cat: Catalog, out):
     )
 
 
-def cmd_sink_compact(argv, cat: Catalog, out):
+@verb("sink-compact", 1, {
+    "min-batches": (int, 2), "keep-last": (int, 0), "order-by": (str, None),
+})
+def cmd_sink_compact(args, opts, cat: Catalog, out):
     """dn sink-compact <sink-path> [--min-batches=2] [--keep-last=0]
     [--order-by=COL]: fold the curated sink's committed-and-ledgered
     ``__dn_batch`` directories into a consolidated base segment
@@ -1387,13 +1343,12 @@ def cmd_sink_compact(argv, cat: Catalog, out):
     (streaming/sink.py)."""
     from dragnet_spark.streaming.sink import compact_sink
 
-    opts = _parse_args(argv, ["min-batches", "keep-last", "order-by"])
-    (sink,) = _nargs(opts, 1)
+    (sink,) = args
     report = compact_sink(
         _get_spark(),
         sink,
-        min_batches=int(opts.get("min_batches", "2")),
-        keep_last=int(opts.get("keep_last", "0")),
+        min_batches=opts["min_batches"],
+        keep_last=opts["keep_last"],
         order_by=opts.get("order_by"),
     )
     if report["segment"]:
@@ -1413,25 +1368,26 @@ def cmd_sink_compact(argv, cat: Catalog, out):
         )
 
 
-def cmd_lm_build(argv, cat: Catalog, out):
+@verb("lm-build", 1, {
+    "out": (str, REQUIRED), "text-field": (str, "text"),
+    "min-count": (int, 2), "lam-pct": (int, 80),
+})
+def cmd_lm_build(args, opts, cat: Catalog, out):
     """dn lm-build <docs.parquet> --out=PATH [--text-field=text]
     [--min-count=2] [--lam-pct=80]: freeze the reference corpus's
     interpolated bigram-LM counts into an LM store (index/lm.py) for
     ingest gating — the judged data must never shift the judge."""
     from dragnet_spark.index.lm import build_lm_store
 
-    opts = _parse_args(argv, ["out", "text-field", "min-count", "lam-pct"])
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
+    (src,) = args
     spark = _get_spark()
     meta = build_lm_store(
         spark,
         spark.read.parquet(src),
         opts["out"],
-        text_col=opts.get("text_field", "text"),
-        min_count=int(opts.get("min_count", "2")),
-        lam_pct=int(opts.get("lam_pct", "80")),
+        text_col=opts["text_field"],
+        min_count=opts["min_count"],
+        lam_pct=opts["lam_pct"],
     )
     out.write(
         "built LM store at %s: %d tokens, %d vocab, bigrams c2>=%d\n"
@@ -1440,7 +1396,11 @@ def cmd_lm_build(argv, cat: Catalog, out):
     )
 
 
-def cmd_lm_score(argv, cat: Catalog, out):
+@verb("lm-score", 1, {
+    "docs": (str, REQUIRED), "id-field": (str, "doc_id"),
+    "text-field": (str, "text"), "min-mean-logp": (float, None),
+})
+def cmd_lm_score(args, opts, cat: Catalog, out):
     """dn lm-score <lm-path> --docs=<parquet> [--id-field=doc_id]
     [--text-field=text] [--min-mean-logp=X]: score (or, with the
     threshold, gate) a batch under the frozen reference LM; prints
@@ -1449,19 +1409,13 @@ def cmd_lm_score(argv, cat: Catalog, out):
 
     from dragnet_spark.index.lm import lm_gate, score_against_lm_store
 
-    opts = _parse_args(
-        argv, ["docs", "id-field", "text-field", "min-mean-logp"]
-    )
-    (lm,) = _nargs(opts, 1)
-    if "docs" not in opts:
-        raise UsageError('"docs" option is required')
+    (lm,) = args
     spark = _get_spark()
     docs = spark.read.parquet(opts["docs"])
-    idc = opts.get("id_field", "doc_id")
-    txt = opts.get("text_field", "text")
+    idc, txt = opts["id_field"], opts["text_field"]
     if "min_mean_logp" in opts:
         kept = lm_gate(
-            spark, lm, docs, float(opts["min_mean_logp"]),
+            spark, lm, docs, opts["min_mean_logp"],
             text_col=txt, id_col=idc,
         )
         n_in, n_out = docs.count(), kept.count()
@@ -1477,7 +1431,11 @@ def cmd_lm_score(argv, cat: Catalog, out):
     out.write("scored %d docs\n" % len(rows))
 
 
-def cmd_bloom_build(argv, cat: Catalog, out):
+@verb("bloom-build", 1, {
+    "out": (str, REQUIRED), "text-field": (str, "text"), "gram-n": (int, 8),
+    "m-bits": (int, 1 << 20), "k": (int, 5), "src-field": (str, None),
+})
+def cmd_bloom_build(args, opts, cat: Catalog, out):
     """dn bloom-build <bench.parquet> --out=PATH [--text-field=text]
     [--gram-n=8] [--m-bits=1048576] [--k=5] [--src-field=COL]: freeze
     the benchmark corpus's distinct gram hashes into a Bloom store
@@ -1487,21 +1445,16 @@ def cmd_bloom_build(argv, cat: Catalog, out):
     benchmark each gram belongs to (enables bloom-gate --attribute)."""
     from dragnet_spark.index.bloom import build_bloom_store
 
-    opts = _parse_args(
-        argv, ["out", "text-field", "gram-n", "m-bits", "k", "src-field"]
-    )
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
+    (src,) = args
     spark = _get_spark()
     meta = build_bloom_store(
         spark,
         spark.read.parquet(src),
         opts["out"],
-        text_col=opts.get("text_field", "text"),
-        gram_n=int(opts.get("gram_n", "8")),
-        m_bits=int(opts.get("m_bits", str(1 << 20))),
-        k=int(opts.get("k", "5")),
+        text_col=opts["text_field"],
+        gram_n=opts["gram_n"],
+        m_bits=opts["m_bits"],
+        k=opts["k"],
         src_col=opts.get("src_field"),
     )
     out.write(
@@ -1512,7 +1465,12 @@ def cmd_bloom_build(argv, cat: Catalog, out):
     )
 
 
-def cmd_bloom_gate(argv, cat: Catalog, out):
+@verb("bloom-gate", 1, {
+    "docs": (str, REQUIRED), "id-field": (str, "doc_id"),
+    "text-field": (str, "text"), "max-hit-frac": (float, None),
+    "attribute": (FLAG, False),
+})
+def cmd_bloom_gate(args, opts, cat: Catalog, out):
     """dn bloom-gate <store-path> --docs=<parquet> [--id-field=doc_id]
     [--text-field=text] [--max-hit-frac=X] [--attribute]: score a
     batch against the frozen benchmark gram store; with
@@ -1528,18 +1486,11 @@ def cmd_bloom_gate(argv, cat: Catalog, out):
         score_against_bloom_store,
     )
 
-    opts = _parse_args(
-        argv, ["docs", "id-field", "text-field", "max-hit-frac",
-               "attribute"]
-    )
-    (store,) = _nargs(opts, 1)
-    if "docs" not in opts:
-        raise UsageError('"docs" option is required')
+    (store,) = args
     spark = _get_spark()
     docs = spark.read.parquet(opts["docs"])
-    idc = opts.get("id_field", "doc_id")
-    txt = opts.get("text_field", "text")
-    if opts.get("attribute"):
+    idc, txt = opts["id_field"], opts["text_field"]
+    if opts["attribute"]:
         rows = attribute_against_bloom_store(
             spark, store, docs, text_col=txt, id_col=idc
         ).collect()
@@ -1549,7 +1500,7 @@ def cmd_bloom_gate(argv, cat: Catalog, out):
         return
     if "max_hit_frac" in opts:
         kept = decontam_gate(
-            spark, store, docs, float(opts["max_hit_frac"]),
+            spark, store, docs, opts["max_hit_frac"],
             text_col=txt, id_col=idc,
         )
         n_in, n_out = docs.count(), kept.count()
@@ -1565,17 +1516,16 @@ def cmd_bloom_gate(argv, cat: Catalog, out):
     out.write("scored %d docs\n" % len(rows))
 
 
-def cmd_profile(argv, cat: Catalog, out):
+@verb("profile", 1, {"format": (str, "parquet")})
+def cmd_profile(args, opts, cat: Catalog, out):
     """dn profile <path> [--format=parquet]: one-scan per-column
     profile of a table — null counts, exact distincts, numeric/time
     ranges (epoch micros), string ranges. Single pass regardless of
     column count (ops/profile.py); the collect is one row per column."""
     from dragnet_spark.ops.profile import profile_table
 
-    opts = _parse_args(argv, ["format"])
-    (path,) = _nargs(opts, 1)
-    fmt = opts.get("format", "parquet")
-    df = _get_spark().read.format(fmt).load(path)
+    (path,) = args
+    df = _get_spark().read.format(opts["format"]).load(path)
     rows = profile_table(df).collect()
     out.write(
         "%-16s %12s %10s %10s %22s %22s\n"
@@ -1594,7 +1544,8 @@ def cmd_profile(argv, cat: Catalog, out):
         )
 
 
-def cmd_maintain(argv, cat: Catalog, out):
+@verb("maintain", 1, {"dry-run": (FLAG, False), "max-files": (int, 4)})
+def cmd_maintain(args, opts, cat: Catalog, out):
     """dn maintain <root> [--dry-run] [--max-files=4]: discover every
     dragnet store under <root> (event index, fingerprint/band/SRP
     stores, vector index, curated streaming sink — classified by
@@ -1607,13 +1558,12 @@ def cmd_maintain(argv, cat: Catalog, out):
     continuously-appended stores (index/maintain.py)."""
     from dragnet_spark.index.maintain import run_maintenance
 
-    opts = _parse_args(argv, ["dry-run", "max-files"])
-    (root,) = _nargs(opts, 1)
+    (root,) = args
     plan = run_maintenance(
         _get_spark(),
         root,
-        dry_run=bool(opts.get("dry_run")),
-        max_files=int(opts.get("max_files", "4")),
+        dry_run=opts["dry_run"],
+        max_files=opts["max_files"],
     )
     for rec in plan:
         sig = "max_files/part=%d" % rec["max_files_per_partition"]
@@ -1628,12 +1578,10 @@ def cmd_maintain(argv, cat: Catalog, out):
                     rec["mean_rows_per_cell"],
                     rec["target_rows_per_cell"],
                 )
-        verb = (
-            "would run" if bool(opts.get("dry_run")) else "ran"
-        )
+        done = "would run" if opts["dry_run"] else "ran"
         what = ",".join(rec["actions"]) if rec["actions"] else "nothing"
         line = "%-7s %s (%s): %s %s" % (
-            rec["kind"], rec["path"], sig, verb, what
+            rec["kind"], rec["path"], sig, done, what
         )
         if rec.get("advisories"):
             line += " [ADVISORY %s]" % ",".join(rec["advisories"])
@@ -1646,7 +1594,13 @@ def cmd_maintain(argv, cat: Catalog, out):
     )
 
 
-def cmd_semdedup(argv, cat: Catalog, out):
+@verb("semdedup", 1, {
+    "k": (int, 8), "target-rows": (int, None), "iterations": (int, 3),
+    "threshold": (float, 0.9), "id-col": (str, "vec_id"),
+    "vec-col": (str, "embedding"), "format": (str, "parquet"),
+    "out": (str, None), "two-level": (FLAG, False),
+})
+def cmd_semdedup(args, opts, cat: Catalog, out):
     """dn semdedup <vectors> [--k=8 | --target-rows=N] [--iterations=3]
     [--threshold=0.9] [--id-col=vec_id] [--vec-col=embedding]
     [--format=parquet] [--out=PATH]: SemDeDup semantic dedup — exact
@@ -1672,35 +1626,28 @@ def cmd_semdedup(argv, cat: Catalog, out):
         semdedup_prune_pairs,
     )
 
-    opts = _parse_args(
-        argv,
-        ["k", "target-rows", "iterations", "threshold", "id-col",
-         "vec-col", "format", "out", "two-level"],
-    )
-    (path,) = _nargs(opts, 1)
-    k = int(opts.get("k", "8"))
+    (path,) = args
     target = opts.get("target_rows")
-    iters = int(opts.get("iterations", "3"))
-    thr = float(opts.get("threshold", "0.9"))
-    id_col = opts.get("id_col", "vec_id")
-    vec_col = opts.get("vec_col", "embedding")
+    iters, thr = opts["iterations"], opts["threshold"]
+    id_col, vec_col = opts["id_col"], opts["vec_col"]
     spark = _get_spark()
-    df = spark.read.format(opts.get("format", "parquet")).load(path)
-    if opts.get("two_level"):
+    df = spark.read.format(opts["format"]).load(path)
+    if opts["two_level"]:
         assign = kmeans_assign_two_level(
             df, vec_col=vec_col, id_col=id_col, iterations=iters,
-            target_rows_per_cluster=int(target) if target else 250,
+            target_rows_per_cluster=250 if target is None else target,
         )
-    elif target:
+    elif target is not None:
         # self-sizing: flat below k=1024 (lower constants), two-level
         # above (n·√k) — the graded routing boundary (TWO_LEVEL_MIN_K)
         assign = kmeans_assign_auto(
             df, vec_col=vec_col, id_col=id_col, iterations=iters,
-            target_rows_per_cluster=int(target),
+            target_rows_per_cluster=target,
         )
     else:
         assign = kmeans_assign(
-            df, vec_col=vec_col, id_col=id_col, k=k, iterations=iters,
+            df, vec_col=vec_col, id_col=id_col, k=opts["k"],
+            iterations=iters,
         )
     sizes = sorted(
         (r["cluster"], r["n"])
@@ -1730,7 +1677,17 @@ def cmd_semdedup(argv, cat: Catalog, out):
         out.write("survivors -> %s\n" % opts["out"])
 
 
-def cmd_graph(argv, cat: Catalog, out):
+# the pair-table options of graph and the components store verbs
+_PAIR_OPTS = {
+    "id-a": (str, "id_a"), "id-b": (str, "id_b"), "format": (str, "parquet"),
+}
+
+
+@verb("graph", 1, {
+    "op": (str, None), "seeds": (str, None), "iterations": (int, 4),
+    "out": (str, None), "top": (int, 20), **_PAIR_OPTS,
+})
+def cmd_graph(args, opts, cat: Catalog, out):
     """dn graph <pairs> --op=pagerank|trustrank|triangles|clustering|components
     [--seeds=PATH] [--iterations=4] [--id-a=id_a] [--id-b=id_b]
     [--format=parquet] [--out=PATH] [--top=20]: graph analytics over a
@@ -1748,22 +1705,17 @@ def cmd_graph(argv, cat: Catalog, out):
         triangle_counts,
     )
 
-    opts = _parse_args(
-        argv,
-        ["op", "seeds", "iterations", "id-a", "id-b", "format", "out",
-         "top"],
-    )
-    (path,) = _nargs(opts, 1)
+    (path,) = args
     op = opts.get("op")
     if op not in ("pagerank", "trustrank", "triangles", "clustering",
                   "components"):
         raise UsageError(
             "--op must be pagerank|trustrank|triangles|clustering|components"
         )
-    ia, ib = opts.get("id_a", "id_a"), opts.get("id_b", "id_b")
-    iters = int(opts.get("iterations", "4"))
+    ia, ib = opts["id_a"], opts["id_b"]
+    iters = opts["iterations"]
     spark = _get_spark()
-    pairs = spark.read.format(opts.get("format", "parquet")).load(path)
+    pairs = spark.read.format(opts["format"]).load(path)
     nodes = (
         pairs.select(F.col(ia).alias("id"))
         .unionByName(pairs.select(F.col(ib).alias("id")))
@@ -1790,8 +1742,7 @@ def cmd_graph(argv, cat: Catalog, out):
     else:
         res = connected_components(nodes, pairs, src_col=ia, dst_col=ib)
         score = "component"
-    top = int(opts.get("top", "20"))
-    rows = res.orderBy(F.desc(score), "id").limit(top).collect()
+    rows = res.orderBy(F.desc(score), "id").limit(opts["top"]).collect()
     cols = res.columns
     out.write("  ".join(cols) + "\n")
     for r in rows:
@@ -1801,7 +1752,11 @@ def cmd_graph(argv, cat: Catalog, out):
         out.write("%s -> %s\n" % (op, opts["out"]))
 
 
-def cmd_distinct(argv, cat: Catalog, out):
+@verb("distinct", 1, {
+    "col": (str, REQUIRED), "group-by": (str, None), "k": (int, 256),
+    "exact": (FLAG, False), "format": (str, "parquet"),
+})
+def cmd_distinct(args, opts, cat: Catalog, out):
     """dn distinct <path> --col=C [--group-by=G] [--k=256] [--exact]
     [--format=parquet]: KMV bottom-k estimate of COUNT(DISTINCT C),
     optionally per group (ops/sketch.py — deterministic md5 order
@@ -1812,37 +1767,33 @@ def cmd_distinct(argv, cat: Catalog, out):
 
     from dragnet_spark.ops.sketch import kmv_distinct
 
-    opts = _parse_args(argv, ["col", "group-by", "k", "exact", "format"])
-    (path,) = _nargs(opts, 1)
-    col = opts.get("col")
-    if not col:
-        raise UsageError("--col is required")
-    k = int(opts.get("k", "256"))
-    grp = opts.get("group_by")
+    (path,) = args
+    col, grp = opts["col"], opts.get("group_by")
     spark = _get_spark()
-    df = spark.read.format(opts.get("format", "parquet")).load(path)
+    df = spark.read.format(opts["format"]).load(path)
     gcols = [grp] if grp else ["__g"]
     if not grp:
         df = df.withColumn("__g", F.lit("all"))
-    est = kmv_distinct(df, col, gcols, k=k)
-    if opts.get("exact"):
+    est = kmv_distinct(df, col, gcols, k=opts["k"])
+    if opts["exact"]:
         exact = df.groupBy(*gcols).agg(
             F.countDistinct(col).alias("exact_distinct")
         )
         est = est.join(exact, gcols)
     rows = est.orderBy(gcols[0]).collect()
     hdr = "%-24s %14s" % (grp or "group", "est_distinct")
-    if opts.get("exact"):
+    if opts["exact"]:
         hdr += " %14s" % "exact_distinct"
     out.write(hdr + "\n")
     for r in rows:
         line = "%-24s %14d" % (r[gcols[0]], r["est_distinct"])
-        if opts.get("exact"):
+        if opts["exact"]:
             line += " %14d" % r["exact_distinct"]
         out.write(line + "\n")
 
 
-def cmd_media_probe(argv, cat: Catalog, out):
+@verb("media-probe", 1, {"glob": (str, None), "verbose": (FLAG, False)})
+def cmd_media_probe(args, opts, cat: Catalog, out):
     """dn media-probe <dir> [--glob=*.png] [--verbose]: ingest a
     media directory via the binaryFile source (sources/media.py) and
     run the header-only metadata probe — detected format, dimensions,
@@ -1853,8 +1804,7 @@ def cmd_media_probe(argv, cat: Catalog, out):
     from dragnet_spark.ops.multimodal import probe_media_metadata
     from dragnet_spark.sources.media import read_media_dir
 
-    opts = _parse_args(argv, ["glob", "verbose"])
-    (path,) = _nargs(opts, 1)
+    (path,) = args
     spark = _get_spark()
     media = read_media_dir(spark, path, glob=opts.get("glob"))
     probed = probe_media_metadata(
@@ -1876,7 +1826,7 @@ def cmd_media_probe(argv, cat: Catalog, out):
             "%-12s %8d %14d %10d\n"
             % (r["detected_format"], r["n"], r["bytes"], r["mismatched"])
         )
-    if opts.get("verbose"):
+    if opts["verbose"]:
         for r in probed.filter(F.col("type_mismatch") == 1).orderBy("path").collect():
             out.write(
                 "MISMATCH %s declared=%s detected=%s\n"
@@ -1896,7 +1846,8 @@ def _kmv_print_estimates(spark, store, out):
         out.write("%-24s %14d\n" % (key, r["est_distinct"]))
 
 
-def cmd_comp_build(argv, cat: Catalog, out):
+@verb("comp-build", 1, {"out": (str, REQUIRED), "ids": (str, None), **_PAIR_OPTS})
+def cmd_comp_build(args, opts, cat: Catalog, out):
     """dn comp-build <pairs> --out=STORE [--ids=PATH] [--id-a=id_a]
     [--id-b=id_b] [--format=parquet]: materialize an incremental
     connected-components store (index/components.py) from an
@@ -1908,13 +1859,10 @@ def cmd_comp_build(argv, cat: Catalog, out):
 
     from dragnet_spark.index.components import build_components_store
 
-    opts = _parse_args(argv, ["out", "ids", "id-a", "id-b", "format"])
-    (path,) = _nargs(opts, 1)
-    if not opts.get("out"):
-        raise UsageError("--out is required")
-    ia, ib = opts.get("id_a", "id_a"), opts.get("id_b", "id_b")
+    (path,) = args
+    ia, ib = opts["id_a"], opts["id_b"]
     spark = _get_spark()
-    pairs = spark.read.format(opts.get("format", "parquet")).load(path)
+    pairs = spark.read.format(opts["format"]).load(path)
     pairs = pairs.select(F.col(ia).alias("id_a"), F.col(ib).alias("id_b"))
     if opts.get("ids"):
         ids = spark.read.parquet(opts["ids"])
@@ -1929,7 +1877,8 @@ def cmd_comp_build(argv, cat: Catalog, out):
     out.write("built components store at %s\n" % opts["out"])
 
 
-def cmd_comp_merge(argv, cat: Catalog, out):
+@verb("comp-merge", 1, {"data": (str, REQUIRED), **_PAIR_OPTS})
+def cmd_comp_merge(args, opts, cat: Catalog, out):
     """dn comp-merge <store> --data=PAIRS [--id-a=id_a] [--id-b=id_b]
     [--format=parquet]: fold one arriving batch of pairs into the
     store — work proportional to the batch (endpoint resolve +
@@ -1938,19 +1887,17 @@ def cmd_comp_merge(argv, cat: Catalog, out):
 
     from dragnet_spark.index.components import merge_components_batch
 
-    opts = _parse_args(argv, ["data", "id-a", "id-b", "format"])
-    (store,) = _nargs(opts, 1)
-    if not opts.get("data"):
-        raise UsageError("--data is required")
-    ia, ib = opts.get("id_a", "id_a"), opts.get("id_b", "id_b")
+    (store,) = args
+    ia, ib = opts["id_a"], opts["id_b"]
     spark = _get_spark()
-    pairs = spark.read.format(opts.get("format", "parquet")).load(opts["data"])
+    pairs = spark.read.format(opts["format"]).load(opts["data"])
     pairs = pairs.select(F.col(ia).alias("id_a"), F.col(ib).alias("id_b"))
     merge_components_batch(spark, pairs, store)
     out.write("folded %s into %s\n" % (opts["data"], store))
 
 
-def cmd_comp_read(argv, cat: Catalog, out):
+@verb("comp-read", 1, {"out": (str, None), "top": (int, 20)})
+def cmd_comp_read(args, opts, cat: Catalog, out):
     """dn comp-read <store> [--out=PATH] [--top=20]: current (id,
     component) assignment with redirects applied; --out writes the
     full table as parquet."""
@@ -1958,20 +1905,21 @@ def cmd_comp_read(argv, cat: Catalog, out):
 
     from dragnet_spark.index.components import components_store_read
 
-    opts = _parse_args(argv, ["out", "top"])
-    (store,) = _nargs(opts, 1)
+    (store,) = args
     spark = _get_spark()
     res = components_store_read(spark, store)
-    for r in res.orderBy("component", "id").limit(
-        int(opts.get("top", "20"))
-    ).collect():
+    for r in res.orderBy("component", "id").limit(opts["top"]).collect():
         out.write("%d  %d\n" % (r["id"], r["component"]))
     if opts.get("out"):
         res.write.mode("error").parquet(opts["out"])
         out.write("assignment -> %s\n" % opts["out"])
 
 
-def cmd_kmv_build(argv, cat: Catalog, out):
+@verb("kmv-build", 1, {
+    "col": (str, REQUIRED), "group-by": (str, None), "k": (int, 256),
+    "out": (str, REQUIRED), "format": (str, "parquet"),
+})
+def cmd_kmv_build(args, opts, cat: Catalog, out):
     """dn kmv-build <data> --col=C --out=STORE [--group-by=G]
     [--k=256] [--format=parquet]: materialize a bottom-k KMV
     cardinality sketch (index/kmv.py) — O(groups·k) state a live
@@ -1980,24 +1928,20 @@ def cmd_kmv_build(argv, cat: Catalog, out):
 
     from dragnet_spark.index.kmv import build_kmv_store
 
-    opts = _parse_args(argv, ["col", "group-by", "k", "out", "format"])
-    (path,) = _nargs(opts, 1)
-    if not opts.get("col") or not opts.get("out"):
-        raise UsageError("--col and --out are required")
+    (path,) = args
     spark = _get_spark()
-    df = spark.read.format(opts.get("format", "parquet")).load(path)
+    df = spark.read.format(opts["format"]).load(path)
     grp = opts.get("group_by")
     gcols = [grp] if grp else ["__g"]
     if not grp:
         df = df.withColumn("__g", F.lit("all"))
-    build_kmv_store(
-        spark, df, opts["out"], opts["col"], gcols, k=int(opts.get("k", "256"))
-    )
-    out.write("built KMV sketch (k=%s) at %s\n" % (opts.get("k", "256"), opts["out"]))
+    build_kmv_store(spark, df, opts["out"], opts["col"], gcols, k=opts["k"])
+    out.write("built KMV sketch (k=%s) at %s\n" % (opts["k"], opts["out"]))
     _kmv_print_estimates(spark, opts["out"], out)
 
 
-def cmd_kmv_merge(argv, cat: Catalog, out):
+@verb("kmv-merge", 1, {"data": (str, REQUIRED), "format": (str, "parquet")})
+def cmd_kmv_merge(args, opts, cat: Catalog, out):
     """dn kmv-merge <store> --data=BATCH [--format=parquet]: fold one
     arriving batch into the sketch (lease-guarded stage-then-swap;
     bit-identical to rebuilding over everything ingested so far)."""
@@ -2005,12 +1949,9 @@ def cmd_kmv_merge(argv, cat: Catalog, out):
 
     from dragnet_spark.index.kmv import load_kmv_meta, merge_kmv_batch
 
-    opts = _parse_args(argv, ["data", "format"])
-    (store,) = _nargs(opts, 1)
-    if not opts.get("data"):
-        raise UsageError("--data is required")
+    (store,) = args
     spark = _get_spark()
-    df = spark.read.format(opts.get("format", "parquet")).load(opts["data"])
+    df = spark.read.format(opts["format"]).load(opts["data"])
     if load_kmv_meta(store)["group_cols"] == ["__g"]:
         df = df.withColumn("__g", F.lit("all"))
     merge_kmv_batch(spark, df, store)
@@ -2018,68 +1959,12 @@ def cmd_kmv_merge(argv, cat: Catalog, out):
     _kmv_print_estimates(spark, store, out)
 
 
-def cmd_kmv_est(argv, cat: Catalog, out):
+@verb("kmv-est", 1)
+def cmd_kmv_est(args, opts, cat: Catalog, out):
     """dn kmv-est <store>: print the per-group distinct estimates the
     persisted sketch implies — no corpus scan."""
-    opts = _parse_args(argv, [])
-    (store,) = _nargs(opts, 1)
+    (store,) = args
     _kmv_print_estimates(_get_spark(), store, out)
-
-
-COMMANDS = {
-    "datasource-add": cmd_datasource_add,
-    "datasource-list": cmd_datasource_list,
-    "datasource-remove": cmd_datasource_remove,
-    "datasource-update": cmd_datasource_update,
-    "datasource-show": cmd_datasource_show,
-    "metric-add": cmd_metric_add,
-    "metric-list": cmd_metric_list,
-    "metric-remove": cmd_metric_remove,
-    "build": cmd_build,
-    "compact": cmd_compact,
-    "index-config": cmd_index_config,
-    "index-read": cmd_index_read,
-    "index-scan": cmd_index_scan,
-    "query": cmd_query,
-    "scan": cmd_scan,
-    "vindex-build": cmd_vindex_build,
-    "vindex-append": cmd_vindex_append,
-    "vindex-query": cmd_vindex_query,
-    "vindex-compact": cmd_vindex_compact,
-    "vindex-ingest": cmd_vindex_ingest,
-    "vindex-recenter": cmd_vindex_recenter,
-    "maintain": cmd_maintain,
-    "semdedup": cmd_semdedup,
-    "graph": cmd_graph,
-    "distinct": cmd_distinct,
-    "media-probe": cmd_media_probe,
-    "comp-build": cmd_comp_build,
-    "comp-merge": cmd_comp_merge,
-    "comp-read": cmd_comp_read,
-    "kmv-build": cmd_kmv_build,
-    "kmv-merge": cmd_kmv_merge,
-    "kmv-est": cmd_kmv_est,
-    "sink-compact": cmd_sink_compact,
-    "profile": cmd_profile,
-    "lm-build": cmd_lm_build,
-    "lm-score": cmd_lm_score,
-    "bloom-build": cmd_bloom_build,
-    "bloom-gate": cmd_bloom_gate,
-    "vindex-stats": cmd_vindex_stats,
-    "fp-build": cmd_fp_build,
-    "fp-probe": cmd_fp_probe,
-    "fp-compact": cmd_fp_compact,
-    "band-build": cmd_band_build,
-    "band-probe": cmd_band_probe,
-    "band-append": cmd_band_append,
-    "band-compact": cmd_band_compact,
-    "band-pairs": cmd_band_pairs,
-    "srp-pairs": cmd_srp_pairs,
-    "srp-build": cmd_srp_build,
-    "srp-append": cmd_srp_append,
-    "srp-probe": cmd_srp_probe,
-    "srp-compact": cmd_srp_compact,
-}
 
 
 def main(argv: list[str] | None = None, out=None, config_path: str | None = None) -> int:
@@ -2093,9 +1978,11 @@ def main(argv: list[str] | None = None, out=None, config_path: str | None = None
         sys.stderr.write('%s: unknown command: "%s"\n' % (ARG0, cmdname))
         sys.stderr.write(USAGE + "\n")
         return 2
+    v = COMMANDS[cmdname]
     cat = Catalog.load(config_path or default_config_path())
     try:
-        COMMANDS[cmdname](rest, cat, out)
+        args, opts = _parse_args(rest, v.nargs, v.options)
+        v.run(args, opts, cat, out)
         return 0
     except UsageError as e:
         sys.stderr.write("%s: %s\n" % (ARG0, e))

@@ -56,8 +56,13 @@ import os
 from pyspark.sql import SparkSession
 
 from dragnet_spark.index.bloom import BLOOM_MARKER
-from dragnet_spark.index.build import INDEX_META_FILE
-from dragnet_spark.index.components import COMP_META, LABELS_DIR, REDIRECTS_DIR
+from dragnet_spark.index.build import INDEX_META_FILE, compact_index
+from dragnet_spark.index.components import (
+    COMP_META,
+    LABELS_DIR,
+    REDIRECTS_DIR,
+    compact_components_store,
+)
 from dragnet_spark.index.fingerprints import (
     BAND_DIR,
     BAND_META,
@@ -66,12 +71,20 @@ from dragnet_spark.index.fingerprints import (
     SRP_META,
     SRP_PAIR_DIR,
     STORE_DIR,
+    compact_band_store,
+    compact_fingerprint_store,
+    compact_srp_store,
 )
 from dragnet_spark.index.kmv import KMV_META, SKETCH_DIR
 from dragnet_spark.index.lm import LM_MARKER
 from dragnet_spark.index.vector import META_FILE as VINDEX_META
-from dragnet_spark.index.vector import VECTORS_DIR
-from dragnet_spark.streaming.sink import SINK_MARKER
+from dragnet_spark.index.vector import (
+    VECTORS_DIR,
+    compact_vector_index,
+    recenter_vector_index,
+    vector_index_health,
+)
+from dragnet_spark.streaming.sink import SINK_MARKER, compact_sink
 
 # marker file → (kind, data subdirectories holding partitioned parquet)
 _MARKERS = {
@@ -152,8 +165,9 @@ def _max_files_per_leaf(data_dir: str) -> int:
 
 
 def store_health(spark: SparkSession, path: str, kind: str) -> dict:
-    """Health signals for one store. Filesystem-only except the vector
-    index's cell stats (parquet row-group metadata)."""
+    """Health signals for one store, filesystem-only. A vector index's
+    cell-population signals come from ``vector_index_health``, which
+    :func:`plan_maintenance` reads with its triggers."""
     h: dict = {"path": path, "kind": kind}
     if kind == "sink":
         # the sink's fragmentation unit is the BATCH DIR, not files
@@ -182,27 +196,6 @@ def store_health(spark: SparkSession, path: str, kind: str) -> dict:
         h["bloom_fill"] = round(fill, 6)
         h["bloom_est_fpp"] = round(fill ** meta["k"], 9)
         h["n_grams"] = meta["n_grams"]
-    if kind == "vindex":
-        from dragnet_spark.index.vector import (
-            load_vector_index_meta,
-            vector_index_cell_stats,
-        )
-
-        meta = load_vector_index_meta(path)
-        counts = [
-            r["n_vectors"]
-            for r in vector_index_cell_stats(spark, path).collect()
-        ]
-        total = sum(counts)
-        h["rows"] = total
-        h["skew"] = (
-            max(counts) / (total / len(counts)) if counts else 0.0
-        )
-        target = meta.get("target_rows_per_cell")
-        h["target_rows_per_cell"] = target
-        h["mean_rows_per_cell"] = total / max(
-            int(meta.get("n_centroids", 1)), 1
-        )
     return h
 
 
@@ -218,9 +211,9 @@ def plan_maintenance(
     Returns one record per store: the health dict plus ``actions``
     (possibly empty) and ``advisories`` (flags the planner never
     executes). Decision order: a vindex that needs recentering
-    (drift OR growth) gets ``recenter`` alone — the rebuild rewrites
-    every cell, so a compact would be wasted work; otherwise any store
-    past ``max_files`` gets ``compact``. A bloom store whose implied
+    (``vector_index_health``: drift OR growth) gets ``recenter`` alone
+    — the rebuild rewrites every cell, so a compact would be wasted
+    work; otherwise any store past ``max_files`` gets ``compact``. A bloom store whose implied
     fpp exceeds ``fpp_advisory`` gets the rebuild advisory."""
     plan = []
     for store in discover_stores(root):
@@ -230,11 +223,13 @@ def plan_maintenance(
         if store["kind"] == "bloom" and h["bloom_est_fpp"] > fpp_advisory:
             h["advisories"].append("rebuild-recommended(larger m_bits)")
         if store["kind"] == "vindex":
-            target = h.get("target_rows_per_cell")
-            if (h["skew"] and h["skew"] >= skew_trigger) or (
-                target is not None
-                and h["mean_rows_per_cell"] >= growth_trigger * target
-            ):
+            v = vector_index_health(
+                spark, store["path"], skew_trigger, growth_trigger
+            )
+            for k in ("rows", "skew", "target_rows_per_cell",
+                      "mean_rows_per_cell"):
+                h[k] = v[k]
+            if v["recenter"]:
                 actions.append("recenter")
         if (
             not actions
@@ -247,22 +242,17 @@ def plan_maintenance(
     return plan
 
 
+#: store kind → its compaction; the ``dn <kind>-compact`` verbs run
+#: the same functions
 _COMPACT = {
-    "index": "dragnet_spark.index.build:compact_index",
-    "fp": "dragnet_spark.index.fingerprints:compact_fingerprint_store",
-    "band": "dragnet_spark.index.fingerprints:compact_band_store",
-    "srp": "dragnet_spark.index.fingerprints:compact_srp_store",
-    "vindex": "dragnet_spark.index.vector:compact_vector_index",
-    "sink": "dragnet_spark.streaming.sink:compact_sink",
-    "components": "dragnet_spark.index.components:compact_components_store",
+    "index": compact_index,
+    "fp": compact_fingerprint_store,
+    "band": compact_band_store,
+    "srp": compact_srp_store,
+    "vindex": compact_vector_index,
+    "sink": compact_sink,
+    "components": compact_components_store,
 }
-
-
-def _resolve(spec: str):
-    import importlib
-
-    mod, fn = spec.split(":")
-    return getattr(importlib.import_module(mod), fn)
 
 
 def run_maintenance(
@@ -292,18 +282,11 @@ def run_maintenance(
             continue
         try:
             for action in rec["actions"]:
-                if action == "recenter":
-                    from dragnet_spark.index.vector import (
-                        recenter_vector_index,
-                    )
-
-                    recenter_vector_index(
-                        spark, rec["path"], wait_s=lease_wait_s
-                    )
-                else:
-                    _resolve(_COMPACT[rec["kind"]])(
-                        spark, rec["path"], wait_s=lease_wait_s
-                    )
+                fn = (
+                    recenter_vector_index if action == "recenter"
+                    else _COMPACT[rec["kind"]]
+                )
+                fn(spark, rec["path"], wait_s=lease_wait_s)
                 rec["applied"].append(action)
         except Exception as exc:  # noqa: BLE001 — reported per store
             rec["error"] = f"{type(exc).__name__}: {exc}"

@@ -285,11 +285,54 @@ def vector_index_cell_stats(spark: SparkSession, path: str) -> DataFrame:
 def vector_index_skew(spark: SparkSession, path: str) -> float:
     """max/mean cell population — the scalar the ~4× recenter trigger
     reads. 0.0 for an empty index."""
-    rows = vector_index_cell_stats(spark, path).collect()
-    if not rows:
-        return 0.0
-    counts = [r["n_vectors"] for r in rows]
-    return max(counts) / (sum(counts) / len(counts))
+    return vector_index_health(spark, path)["skew"]
+
+
+def vector_index_health(
+    spark: SparkSession,
+    path: str,
+    skew_trigger: float = 4.0,
+    growth_trigger: float = 2.0,
+) -> dict:
+    """The recenter signals and decision, the one policy that dn
+    vindex-stats, dn vindex-ingest, dn maintain and the ingest loop's
+    :func:`maybe_recenter_vector_index` all read. Signals (cell-count
+    metadata only): ``cells`` as sorted ``(cell, n_vectors)``,
+    ``rows``, ``skew`` = max/mean over the non-empty cells, and
+    ``mean_rows_per_cell`` over the METADATA cell count (drift that
+    empties cells must not inflate it) against the persisted
+    ``target_rows_per_cell``. ``recenter`` is None, or why to recenter:
+    the mean passed ``growth_trigger`` × target (a balanced index that
+    absorbed 10× its build has skew ~1, yet every probe scans 10× the
+    rows it was designed for), or skew passed ``skew_trigger`` (appends
+    drift away from centroids trained before they existed; probe cost
+    is bounded by the largest probed cell). Empty cells alone are no
+    trigger: a recenter cannot fill a cell no vector is nearest to
+    (duplicated or clustered vectors), so it would recenter forever.
+    ``meta`` is the index metadata."""
+    meta = load_vector_index_meta(path)
+    cells = sorted(
+        (r["cell"], r["n_vectors"])
+        for r in vector_index_cell_stats(spark, path).collect()
+    )
+    counts = [n for _, n in cells]
+    rows = sum(counts)
+    skew = max(counts) / (rows / len(counts)) if counts else 0.0
+    target = meta.get("target_rows_per_cell")
+    mean = rows / max(meta["n_centroids"], 1)
+    recenter = None
+    if target is not None and mean >= growth_trigger * target:
+        recenter = (
+            "mean rows/cell past %gx the target-rows-per-cell policy"
+            % growth_trigger
+        )
+    elif skew >= skew_trigger:
+        recenter = "max/mean skew past the %gx trigger" % skew_trigger
+    return {
+        "meta": meta, "cells": cells, "rows": rows, "skew": skew,
+        "target_rows_per_cell": target, "mean_rows_per_cell": mean,
+        "recenter": recenter,
+    }
 
 
 #: auto_cell_count's hard ceiling. Tied to train_centroids'
@@ -329,36 +372,18 @@ def maybe_recenter_vector_index(
     skew_trigger: float = 4.0,
     growth_trigger: float = 2.0,
 ) -> bool:
-    """The documented recenter trigger as a callable policy: recenter
-    when max/mean cell skew passes ``skew_trigger`` (appends drift
-    away from centroids trained before they existed; probe cost is
-    bounded by the largest probed cell), OR — when the store carries a
-    ``target_rows_per_cell`` growth policy — when the MEAN cell
-    population passes ``growth_trigger × target`` (a perfectly
-    balanced index that absorbed 10× its build size has skew ~1 but
-    every probe now scans 10× the rows it was designed for; skew
-    alone never fires). Returns whether a recenter ran. Both reads
-    are cell-count metadata only; the recenter itself is a full
-    rewrite, lease-serialized against appenders and compaction
-    (lease.py) — the streaming ingest loop calls this every N batches
-    from its own foreachBatch thread (never concurrent with its
-    appends), and external callers serialize on the store lease the
-    same way. Still not free: call at a cadence (every N batches / at
-    restart boundaries), not per batch."""
-    counts = [
-        r["n_vectors"]
-        for r in vector_index_cell_stats(spark, path).collect()
-    ]
-    if not counts:
-        return False
-    meta = load_vector_index_meta(path)
-    # mean over the METADATA cell count, not over non-empty cells:
-    # drift that empties cells must not inflate the apparent mean
-    mean = sum(counts) / max(int(meta.get("n_centroids", len(counts))), 1)
-    skewed = max(counts) / (sum(counts) / len(counts)) >= skew_trigger
-    target = meta.get("target_rows_per_cell")
-    outgrown = target is not None and mean >= growth_trigger * target
-    if not (skewed or outgrown):
+    """Recenter when :func:`vector_index_health` says so; returns
+    whether a recenter ran. The health read is cell-count metadata
+    only; the recenter itself is a full rewrite, lease-serialized
+    against appenders and compaction (lease.py) — the streaming ingest
+    loop calls this every N batches from its own foreachBatch thread
+    (never concurrent with its appends), and external callers
+    serialize on the store lease the same way. Still not free: call at
+    a cadence (every N batches / at restart boundaries), not per
+    batch."""
+    if not vector_index_health(
+        spark, path, skew_trigger, growth_trigger
+    )["recenter"]:
         return False
     recenter_vector_index(spark, path)
     return True

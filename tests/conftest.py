@@ -24,6 +24,18 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
+def log_tree(tmp_path_factory):
+    """A FIXTURES.md §1 request-log tree, generated in-repo: five days
+    from 2014-05-01 under ``%Y/%m-%d/``, two 250-line files a day
+    (``0.log``, ``1.log``)."""
+    from perfbench.logs import generate
+
+    root = str(tmp_path_factory.mktemp("logs"))
+    generate(root, seed=1, days=5, files_per_day=2, records_per_file=250)
+    return root
+
+
+@pytest.fixture(scope="session")
 def tables(spark, sf_dir):
     from dragnet_spark.sources.tables import register_views
 

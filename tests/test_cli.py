@@ -9,7 +9,7 @@ import sys
 
 import pytest
 
-from dragnet_spark.cli import main
+from dragnet_spark.cli import COMMANDS, main
 
 REF_DATA = "/root/reference/tests/data"
 
@@ -100,8 +100,8 @@ def test_config_crud_output_parity(cfg):
     assert 'unknown command: "bogus-command"' in err
 
 
-def test_scan_dry_run_lists_pruned_files(cfg):
-    run(["datasource-add", "logs", f"--path={REF_DATA}",
+def test_scan_dry_run_lists_pruned_files(cfg, log_tree):
+    run(["datasource-add", "logs", f"--path={log_tree}",
          "--time-format=%Y/%m-%d", "--time-field=time"], cfg)
     rc, out, _ = run(
         ["scan", "--dry-run", "--after", "2014-05-01", "--before", "2014-05-03",
@@ -112,10 +112,10 @@ def test_scan_dry_run_lists_pruned_files(cfg):
     assert lines[0] == "would scan files:"
     got = [ln.strip() for ln in lines[1:]]
     assert got == [
-        f"{REF_DATA}/2014/05-01/one.log",
-        f"{REF_DATA}/2014/05-01/two.log",
-        f"{REF_DATA}/2014/05-02/one.log",
-        f"{REF_DATA}/2014/05-02/two.log",
+        f"{log_tree}/2014/05-01/0.log",
+        f"{log_tree}/2014/05-01/1.log",
+        f"{log_tree}/2014/05-02/0.log",
+        f"{log_tree}/2014/05-02/1.log",
     ]
 
 
@@ -347,11 +347,11 @@ def test_csv_datasource_scan(cfg, spark, tmp_path):
     assert {tuple(ln.split()) for ln in out.splitlines()[1:]} == {("GET", "2")}
 
 
-def test_compact_cli_preserves_answers(cfg, spark, tmp_path):
+def test_compact_cli_preserves_answers(cfg, spark, tmp_path, log_tree):
     """dn build (twice, append via second build) then dn compact: query
     output is identical, the view shrinks."""
     idx = str(tmp_path / "cidx")
-    run(["datasource-add", "cm", "--path=/root/reference/tests/data",
+    run(["datasource-add", "cm", f"--path={log_tree}",
          "--time-field=time", f"--index-path={idx}"], cfg)
     run(["metric-add", "cm", "ops",
          "-b", "operation,timestamp[date,field=time,aggr=lquantize,step=86400]"], cfg)
@@ -513,6 +513,34 @@ def test_flag_with_inline_value_is_usage_error(cfg):
          "--quantize=false"], cfg
     )
     assert rc == 2 and 'is a flag and takes no value' in err
+
+
+# positional count per verb; every verb not listed takes one
+_NARGS = {"datasource-list": 0, "metric-add": 2, "metric-remove": 2}
+
+
+@pytest.mark.parametrize("verb", sorted(COMMANDS))
+def test_every_verb_rejects_unknown_option_and_extra_positional(cfg, verb):
+    """Usage errors are caught before a verb's body runs: an unknown
+    option or one positional too many exits 2 with the usage line,
+    without touching data (no Spark session here)."""
+    rc, _, err = run([verb, "--bogus"], cfg)
+    assert rc == 2 and 'unknown option: "--bogus"' in err
+    rc, _, err = run([verb] + ["x"] * (_NARGS.get(verb, 1) + 1), cfg)
+    assert rc == 2 and "usage: dn" in err
+
+
+def test_bad_option_values_are_usage_errors(cfg):
+    """A badly typed or missing option is a usage error (rc 2) in the
+    reference's message shapes, never a traceback out of main()."""
+    rc, _, err = run(["semdedup", "x.parquet", "--k", "abc"], cfg)
+    assert rc == 2 and 'bad value for "k"' in err
+    rc, _, err = run(
+        ["graph", "x.parquet", "--op", "pagerank", "--iterations", "x"], cfg
+    )
+    assert rc == 2 and 'bad value for "iterations"' in err
+    rc, _, err = run(["kmv-build", "x.parquet", "--out", "y"], cfg)
+    assert rc == 2 and '"col" option is required' in err
 
 
 def test_vindex_stats_cli(cfg, tmp_path, spark):
@@ -691,6 +719,40 @@ def test_vindex_growth_policy_cli(cfg, tmp_path, spark):
     meta = load_vector_index_meta(idx)
     assert meta["n_centroids"] > 2  # grew without an explicit count
     assert meta["target_rows_per_cell"] == 5
+
+
+@pytest.mark.parametrize("case", ["healthy", "outgrown", "empty_cell"])
+def test_vindex_stats_agrees_with_maintain_plan(
+    cfg, tmp_path, spark, sf_dir, case
+):
+    """vindex-stats recommends a recenter exactly when dn maintain
+    would run one. An empty cell alone is not a trigger: four distinct
+    vectors over eight cells leave cells empty at skew ~1, and a
+    recenter cannot fill them."""
+    from dragnet_spark.index.maintain import plan_maintenance
+
+    emb = f"{sf_dir}/embeddings.parquet"
+    root = tmp_path / "fleet"
+    idx = str(root / "vi")
+    if case == "healthy":
+        build = [emb, "--centroids", "4"]
+    elif case == "outgrown":
+        build = [emb, "--centroids", "2", "--target-rows-per-cell", "5"]
+    else:
+        dup = str(tmp_path / "dup.parquet")
+        spark.read.parquet(emb).filter("vec_id < 4").crossJoin(
+            spark.range(10)
+        ).selectExpr("vec_id + id * 1000 AS vec_id", "embedding").write.parquet(
+            dup
+        )
+        build = [dup, "--centroids", "8"]
+    assert run(["vindex-build", *build, "--out", idx], cfg)[0] == 0
+    rc, out, _ = run(["vindex-stats", idx], cfg)
+    assert rc == 0
+    recommends = "recommendation: recenter" in out
+    plan = {r["path"]: r for r in plan_maintenance(spark, str(root))}
+    assert recommends == ("recenter" in plan[idx]["actions"])
+    assert recommends == (case == "outgrown")
 
 
 def test_maintain_cli(cfg, tmp_path, spark):

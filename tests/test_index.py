@@ -133,7 +133,7 @@ def test_empty_interval_yields_zero(spark, index_path):
     assert rows == []
 
 
-def test_hourly_interval_build_and_query(spark, tmp_path):
+def test_hourly_interval_build_and_query(spark, tmp_path, log_tree):
     """interval=hour partitions by YYYY-MM-DDTHH and bounded queries
     prune to the hour (reference by_hour indexes,
     lib/dragnet-impl.js:204-228)."""
@@ -144,7 +144,7 @@ def test_hourly_interval_build_and_query(spark, tmp_path):
     from dragnet_spark.index.build import Metric
     from dragnet_spark.scan import scan_ndjson
 
-    data = "/root/reference/tests/data/2014/05-01/one.log"
+    data = f"{log_tree}/2014/05-01/0.log"
     idx = str(tmp_path / "hourly")
     ds = DatasourceConfig(name="i", path=data)
     df, resolver, _ = load_datasource(spark, ds, QueryConfig.load())
@@ -170,7 +170,7 @@ def test_hourly_interval_build_and_query(spark, tmp_path):
     assert got == want and got
 
 
-def test_bounded_rebuild_replaces_only_touched_buckets(spark, tmp_path):
+def test_bounded_rebuild_replaces_only_touched_buckets(spark, tmp_path, log_tree):
     """Incremental rebuild: a build bounded to one day rewrites only
     that day's bucket (dynamic partition overwrite); every other
     interval survives and query results are unchanged."""
@@ -178,7 +178,7 @@ def test_bounded_rebuild_replaces_only_touched_buckets(spark, tmp_path):
     from dragnet_spark.datasource import load_datasource
     from dragnet_spark.index.build import Metric
 
-    data = "/root/reference/tests/data"
+    data = log_tree
     idx = str(tmp_path / "incr")
     ds = DatasourceConfig(name="i", path=data)
     metrics = [
@@ -218,7 +218,7 @@ def test_bounded_rebuild_replaces_only_touched_buckets(spark, tmp_path):
                     "2014-05-05"]
 
 
-def test_bounded_index_query_prunes_partitions(spark, tmp_path, capsys):
+def test_bounded_index_query_prunes_partitions(spark, tmp_path, capsys, log_tree):
     """A bounded index query must prune bucket directories
     (PartitionFilters on __dn_bucket) AND push the record-level
     timestamp bounds into the parquet scan — the two layers that make
@@ -228,7 +228,7 @@ def test_bounded_index_query_prunes_partitions(spark, tmp_path, capsys):
     from dragnet_spark.index.build import Metric
 
     idx = str(tmp_path / "prune")
-    ds = DatasourceConfig(name="i", path="/root/reference/tests/data")
+    ds = DatasourceConfig(name="i", path=log_tree)
     df, r, _ = load_datasource(spark, ds, QueryConfig.load())
     build_index(
         spark, df,
